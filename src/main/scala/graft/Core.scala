@@ -58,13 +58,6 @@ object Core {
   def davg(c: Column): Column = dsum(c) / count(lit(1))
   def oDavg(x: String): String = s"(${oDsum(x)} / COUNT(*))"
 
-  /** Deterministic 31-base polynomial rolling hash of a string, mod
-    * 1e9+7. Expressible identically in Spark and DuckDB SQL (integer
-    * arithmetic stays < 2^63 on both sides: acc < 1e9+7, so
-    * acc*31+255 < 3.3e10). Used as the shared hash primitive for
-    * fingerprinting / MinHash / SimHash so the DuckDB oracle can
-    * recompute the exact same signatures.
-    */
   /** Cache registry. Operators persist small intermediate tables
     * (MinHash signatures, embedding norms) that are consumed more
     * than once within one query plan; [[cached]] persists AND tracks
@@ -125,10 +118,18 @@ object Core {
     * `localCheckpoint` pins executor blocks until RDD GC; a parquet
     * round-trip is released by the tempDir shutdown hook and, unlike
     * `checkpoint()`, needs no cluster-wide checkpoint dir.) */
-  def ckptRound(df: DataFrame, prefix: String): DataFrame = {
-    val dir = tempDir(prefix)
+  def ckptRound(df: DataFrame, prefix: String): DataFrame =
+    parquetLeaf(df, tempDir(prefix))
+
+  /** Write `df` as parquet to `dir` and return the read-back LEAF.
+    * The read passes the schema just written, so it plans without
+    * the footer-inference job every schema-less `read.parquet` runs
+    * (one extra job per checkpoint, CC round and stream spool). The
+    * file source reads every column as nullable, exactly as the
+    * inferred schema would. */
+  def parquetLeaf(df: DataFrame, dir: String): DataFrame = {
     df.write.mode("overwrite").parquet(dir)
-    df.sparkSession.read.parquet(dir)
+    df.sparkSession.read.schema(df.schema).parquet(dir)
   }
 
   /** Epoch MICROSECONDS of the events `ts` column. The driver stores
@@ -145,6 +146,13 @@ object Core {
   def epochNs(c: Column): Column = epochUs(c) * 1000
 
   val HashMod = 1000000007L
+  /** Deterministic 31-base polynomial rolling hash of a string, mod
+    * 1e9+7. Expressible identically in Spark and DuckDB SQL (integer
+    * arithmetic stays < 2^63 on both sides: acc < 1e9+7, so
+    * acc*31+255 < 3.3e10). Used as the shared hash primitive for
+    * fingerprinting / MinHash / SimHash so the DuckDB oracle can
+    * recompute the exact same signatures.
+    */
   def polyHash(c: Column): Column = graft.plans.TextHashes.polyHash(c)
   /** The INTERPRETED spelling of [[polyHash]] (per-code-point
     * `split`+`aggregate` fold) — kept as the parity baseline the

@@ -377,6 +377,10 @@ object Dedup {
     filtered.select("doc_a", "doc_b").distinct()
   }
 
+  /** Verified pairs in no particular order: the registered outputs
+    * sort at the query boundary, while connected components and the
+    * pipeline's victim anti-join never read the order, so they skip
+    * the global range sort. */
   private def minhashPairs(
       sets: org.apache.spark.sql.DataFrame,
       seeds: Seq[Long],
@@ -388,7 +392,6 @@ object Dedup {
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= 0.8)
       .select("doc_a", "doc_b", "jaccard")
-      .orderBy("doc_a", "doc_b")
 
   /** Quote/containment detection: ordered near-dup pairs by SHINGLE
     * CONTAINMENT `|A∩B| / min(|A|,|B|) ≥ 0.9` — catches a document
@@ -495,6 +498,10 @@ object Dedup {
   /** Candidate pairs from an equi-join on any shared band, verified
     * with exact Jaccard >= 0.8 over the shingle sets. */
   def minhashLsh(s: SparkSession, d: String): DataFrame =
+    minhashLshPairs(s, d).orderBy("doc_a", "doc_b")
+
+  /** [[minhashLsh]] without the result sort, for the cluster consumers. */
+  private[graft] def minhashLshPairs(s: SparkSession, d: String): DataFrame =
     // persist: the shingle-set projection feeds three plan branches
     // (banding + both sides of the verify join); at cluster scale the
     // analogue is materializing the signature table between stages
@@ -574,6 +581,7 @@ object Dedup {
     * 16-hash / 8-band MinHash on the 5-gram sets. */
   def ngramJaccard(s: SparkSession, d: String): DataFrame =
     minhashPairs(cached(charShingled(s, d)), A24Gram, NgramBands, NgramRows)
+      .orderBy("doc_a", "doc_b")
 
   // -------------------------------------------------------------------
   // SimHash
@@ -1218,7 +1226,7 @@ object Dedup {
     * carry (label) then (size) keys only. */
   def clusterSizeHistogram(s: SparkSession, d: String): DataFrame = {
     val (labels, _) = connectedComponents(
-      minhashLsh(s, d).select("doc_a", "doc_b"))
+      minhashLshPairs(s, d).select("doc_a", "doc_b"))
     val paired = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
       .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
     val singles = Tables(s, d, "documents")
@@ -1849,10 +1857,15 @@ object Dedup {
     * returned so the planted-chain spec pins the logarithmic
     * behavior.
     *
-    * Scale: per round, one shuffle join + partial-aggregated min for
-    * the neighbor term plus one label-keyed self-join for the hop.
-    * Each round's labels are CHECKPOINTED to parquet and read back as
-    * a leaf, so every round plans against a constant-size tree. This
+    * Scale: the symmetric edge cache is built in ONE pass over
+    * `pairs` — each input row emits both orientations — so the
+    * upstream plan (for [[dupClusters]], the whole LSH band join and
+    * verify) executes once (a union of the two orientations would
+    * plan it twice). Per round, one shuffle join + partial-aggregated
+    * min for the neighbor term plus one label-keyed self-join for the
+    * hop. Each round's labels are CHECKPOINTED to parquet and read
+    * back as a leaf with the written schema (no footer-inference
+    * job), so every round plans against a constant-size tree. This
     * is load-bearing, not hygiene: each round references the previous
     * labels THREE times (neighbor join, base, hop), so under plain
     * caching the analyzed logical plan grows ~3× per round and
@@ -1882,9 +1895,21 @@ object Dedup {
       connectedComponentsLoop(pairs))
   }
 
+  /** Both orientations of every undirected pair, as (src, dst), in
+    * one pass over `pairs`: each row explodes into its two directed
+    * edges. The edge multiset equals `pairs ∪ swapped(pairs)` (a
+    * self-loop appears twice, a pair given in both orientations four
+    * times), but `pairs`' plan runs once instead of once per side. */
+  private[graft] def symmetricEdges(pairs: DataFrame): DataFrame = {
+    val p = pairs.toDF("a", "b")
+    p.select(explode(array(
+        struct(col("a").as("src"), col("b").as("dst")),
+        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
+  }
+
   private def connectedComponentsLoop(pairs: DataFrame): (DataFrame, Int) = {
-    val p2 = pairs.toDF("src", "dst")
-    val edges = cached(p2.union(p2.select(col("dst"), col("src"))))
+    val edges = cached(symmetricEdges(pairs))
     // Head-start initialization: label0 = min(v, min neighbor) is
     // exactly what round 1 of propagation would produce, but costs one
     // groupBy over the cached edges instead of a join+agg+join round —
@@ -1960,14 +1985,12 @@ object Dedup {
       // control. The observed sum is computed over exactly the rows
       // the write materializes, so the probe is byte-identical.
       val obs = org.apache.spark.sql.Observation(s"cc-r$rounds")
-      stepped
+      labels = graft.Core.parquetLeaf(stepped
         .select(col("v"), col("nl").as("lbl"),
           when(col("nl") < col("prev"), 1L).otherwise(0L).as("changed"))
         .observe(obs, coalesce(sum(col("changed")), lit(0L)).as("delta"))
-        .select("v", "lbl")
-        .write.mode("overwrite").parquet(s"$ckpt/r$rounds")
+        .select("v", "lbl"), s"$ckpt/r$rounds")
       delta = obs.get("delta").asInstanceOf[Long]
-      labels = pairs.sparkSession.read.parquet(s"$ckpt/r$rounds")
     }
     // diagnostic parity with the [stream]/[fuzzy-index] logs: round
     // counts separate more-rounds from slower-rounds in bench drift
@@ -1982,7 +2005,7 @@ object Dedup {
     * min doc_id of the component (deterministic). */
   def dupClusters(s: SparkSession, d: String): DataFrame = {
     val (labels, _) = connectedComponents(
-      minhashLsh(s, d).select("doc_a", "doc_b"))
+      minhashLshPairs(s, d).select("doc_a", "doc_b"))
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "lbl")
       .select(col("v").as("doc_id"), col("lbl").as("cluster_id"), col("cluster_size"))

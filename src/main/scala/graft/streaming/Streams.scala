@@ -122,9 +122,9 @@ object Streams {
     awaitAndLog(q, name)
     val spark = df.sparkSession
     val spool = s"${graft.Core.tempDir("graft-stream-out")}/$name"
-    spark.table(name).write.mode("overwrite").parquet(spool)
+    val out = graft.Core.parquetLeaf(spark.table(name), spool)
     spark.catalog.dropTempView(name)
-    spark.read.parquet(spool)
+    out
   }
 
   /** Streaming word count — the reference pipeline lifted onto an

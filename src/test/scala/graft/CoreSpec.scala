@@ -62,6 +62,71 @@ class CoreSpec extends SparkSpec {
       s"state should read ONLY the checkpoint leaf, got: ${c12.inputFiles.take(3).mkString(", ")}")
   }
 
+  /** Runs `body` under a fresh job group and returns, for each job
+    * the group started, whether it ran inside a SQL execution. Writes
+    * and actions always do; parquet schema inference on
+    * `read.parquet` runs its footer job outside one, at planning
+    * time. A sentinel job in a second group drains the listener bus,
+    * which delivers events in order. */
+  private def jobsUnder[T](body: => T): (T, Seq[Boolean]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"corespec-readback-${System.nanoTime}"
+    val sentinel = s"$group-end"
+    val inSql = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` =>
+            inSql.add(props.exists(_.getProperty("spark.sql.execution.id") != null))
+          case `sentinel` => drained.countDown()
+          case _ =>
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "read-back")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      (out, inSql.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def dirOf(leaf: DataFrame): String =
+    new org.apache.hadoop.fs.Path(leaf.inputFiles.head).getParent.toString
+
+  test("parquet read-back of a checkpoint, a CC round and a stream spool starts no schema job") {
+    import spark.implicits._
+    // the detector sees the job the read-backs avoid
+    val probe = Core.ckptRound(spark.range(10).toDF("id"), "graft-corespec")
+    val (_, inferred) = jobsUnder(spark.read.parquet(dirOf(probe)))
+    assert(inferred == Seq(false), s"schema inference should be one non-SQL job: $inferred")
+    // id is non-nullable as written; every read-back reports the
+    // schema a plain read.parquet infers, nullability included
+    def sameAsInferred(leaf: DataFrame): Unit = {
+      val want = spark.read.parquet(dirOf(leaf)).schema
+      assert(leaf.schema == want, s"${leaf.schema.treeString} vs ${want.treeString}")
+    }
+    val (ckpt, ckptJobs) = jobsUnder(Core.ckptRound(spark.range(10).toDF("id"), "graft-corespec"))
+    assert(ckptJobs.nonEmpty && ckptJobs.forall(identity), s"checkpoint jobs: $ckptJobs")
+    sameAsInferred(ckpt)
+    assert(!spark.range(1).schema("id").nullable && ckpt.schema("id").nullable)
+    val ((labels, _), ccJobs) = jobsUnder(graft.operators.Dedup.connectedComponents(
+      Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")))
+    assert(ccJobs.nonEmpty && ccJobs.forall(identity), s"CC jobs: $ccJobs")
+    sameAsInferred(labels)
+    val (spool, streamJobs) = jobsUnder(graft.streaming.Streams.streamWordCount(spark, sf))
+    assert(streamJobs.nonEmpty && streamJobs.forall(identity), s"stream jobs: $streamJobs")
+    sameAsInferred(spool)
+    Core.releaseCaches()
+  }
+
   test("every .collect() in src/main is a 1-row limit(1) loop-control read") {
     // The SCALE.md invariant, pinned grep-ably: no DATA-bearing
     // collect may land in the engine. The three legal sites today are

@@ -290,13 +290,28 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("one-pass symmetric edges equal the two-copy union as a multiset") {
+    // a duplicate pair, a pair given in both orientations, a self-loop
+    val pairs = Seq((1L, 2L), (1L, 2L), (3L, 4L), (4L, 3L), (5L, 5L)).toDF("a", "b")
+    val p2 = pairs.toDF("src", "dst")
+    val union = p2.union(p2.select(col("dst"), col("src")))
+    val edges = Dedup.symmetricEdges(pairs)
+    assert(edges.columns.toSeq == Seq("src", "dst"))
+    def multiset(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long)].collect().toSeq.sorted
+    assert(multiset(edges) == multiset(union))
+  }
+
   test("connected components converge in O(log d) rounds on a long chain") {
     // planted path 0–1–2–…–40 (diameter 40) plus a disjoint triangle:
     // plain min-label propagation needs ~diameter rounds; the
     // pointer-doubling shortcut (engaged from round 3) roughly
     // doubles the collapsed distance per round — deficits run
     // 2, 3, 6, 12, 24, 48 → fixpoint at round 6, +1 detection = 7 —
-    // assert well under the linear count.
+    // assert well under the linear count. Round 1 runs one step and
+    // later rounds two, so the loop stops after 5 materialized
+    // rounds; the edge multiset alone decides that count, so it is
+    // pinned against edge-construction changes.
     val chain = (0L until 40L).map(i => (i, i + 1))
     val tri = Seq((100L, 101L), (101L, 102L), (100L, 102L))
     val pairs = (chain ++ tri).toDF("a", "b")
@@ -305,6 +320,7 @@ class DedupSpec extends SparkSpec {
     (0L to 40L).foreach(v => assert(lbl(v) === 0L))
     Seq(100L, 101L, 102L).foreach(v => assert(lbl(v) === 100L))
     assert(rounds <= 8, s"expected O(log 40) rounds, got $rounds")
+    assert(rounds == 5, s"planted chain converged in $rounds rounds, expected 5")
     Core.releaseCaches()
   }
 

@@ -209,6 +209,46 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("dedup_clusters runs the LSH pipeline once under its CC edge cache") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object aqe extends AdaptiveSparkPlanHelper
+    // the build materializes the edge cache in its first CC round
+    Dedup.dupClusters(spark, sf).collect()
+    // the same frame CC caches; its optimized plan resolves to the cache
+    val edges = Dedup.symmetricEdges(
+      Dedup.minhashLshPairs(spark, sf).select("doc_a", "doc_b"))
+    val cachedPlan = edges.queryExecution.withCachedData match {
+      case r: InMemoryRelation => r.cachedPlan
+      case p => fail(s"CC edge cache not live:\n${p.treeString.take(900)}")
+    }
+    // the band equi-join, under any join strategy AQE settles on
+    val bandJoins = aqe.collect(cachedPlan) {
+      case j: BaseJoinExec
+          if j.leftKeys.collect { case a: Attribute => a.name } == Seq("band_idx", "band_val") => j
+    }
+    assert(bandJoins.size == 1, cachedPlan.toString.take(2000))
+    val rangeSorts = aqe.collect(cachedPlan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(rangeSorts.isEmpty, cachedPlan.toString.take(2000))
+    // the registered pair outputs still sort at the query boundary
+    for (df <- Seq(Dedup.minhashLsh(spark, sf), Dedup.ngramJaccard(spark, sf))) {
+      aqe.stripAQEPlan(df.queryExecution.executedPlan) match {
+        case sort: org.apache.spark.sql.execution.SortExec =>
+          assert(sort.global, sort.toString)
+          assert(sort.sortOrder.map(_.child).collect { case a: Attribute => a.name } ==
+            Seq("doc_a", "doc_b"), sort.toString)
+        case p => fail(s"pair output does not end in its global sort:\n${p.toString.take(600)}")
+      }
+    }
+    Core.releaseCaches()
+  }
+
   test("full k-means broadcasts centroids every round; corpus never shuffles whole") {
     val s = executed(Similarity.kmeansFull(spark, sf))
     // every assignment round scores against a broadcast of the tiny
