@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,10 +19,69 @@ final case class Q(
       * correctness-only demos that exist for oracle parity. */
     headline: Boolean = true)
 
+/** Reads the driver's tables, all parquet: `<sfDir>/<name>.parquet`.
+  *
+  * A schema-less `spark.read.parquet` plans with a one-task job that
+  * reads the files' footers to infer the schema, so every read of a
+  * table would start one job even when the same files were read
+  * moments before. `Tables` runs Spark's inference at most once per
+  * (path, file set, session conf) and afterwards reads with the
+  * memoized schema, the way [[Core.parquetLeaf]] reads back a frame
+  * it just wrote.
+  *
+  *  - Memo: key → (file fingerprint, inferred schema), an LRU of
+  *    [[MemoSize]] entries. It holds no DataFrame or plan: every call
+  *    builds a fresh relation, so two reads of one table still get
+  *    distinct attribute ids and self-joins resolve as before.
+  *  - Key: the path plus every explicitly set session conf. A conf
+  *    that changes inference (`spark.sql.parquet.binaryAsString`,
+  *    `spark.sql.caseSensitive`, …) can only cause a miss, never a
+  *    wrong schema.
+  *  - Invalidation: the fingerprint is the sorted (path, length,
+  *    modification time) of the new relation's own file index, the
+  *    listing every read does anyway. A table rewritten in place, or
+  *    one that gained or lost a file, fails the check; it is then read
+  *    with a plain `read.parquet`, whose schema replaces the entry.
+  *    Inference reads only these files' footers under this conf, so a
+  *    hit returns exactly the schema inference would.
+  */
 object Tables {
-  /** All driver tables are parquet: `<sfDir>/<name>.parquet`. */
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private type Fingerprint = Seq[(String, Long, Long)]
+  private type Key = (String, Map[String, String])
+
+  /** LRU bound: every table of a few scale-factor dirs under a few
+    * session confs. An entry is a schema and a short file list. */
+  private val MemoSize = 64
+
+  private val memo =
+    new java.util.LinkedHashMap[Key, (Fingerprint, StructType)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Key, (Fingerprint, StructType)]): Boolean =
+        size > MemoSize
+    }
+
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val key = (path, spark.conf.getAll)
+    memo.synchronized(Option(memo.get(key)))
+      .map { case (fp, schema) => (spark.read.schema(schema).parquet(path), fp) }
+      .collect { case (df, fp) if fingerprint(df).contains(fp) => df }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        fingerprint(df).foreach(fp => memo.synchronized(memo.put(key, (fp, df.schema))))
+        df
+      }
+  }
+
+  /** Sorted (path, length, modification time) of the files `df`'s
+    * parquet relation lists; None for any other plan shape, which is
+    * then never memoized. */
+  private def fingerprint(df: DataFrame): Option[Fingerprint] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .collect { case index: PartitioningAwareFileIndex =>
+        index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+      }
 }
 
 /** Helpers shared by operator modules. */
@@ -31,15 +91,23 @@ object Core {
     * symlink dirs so repeated runs don't accumulate table copies. */
   def tempDir(prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles
-        if (cs != null) cs.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }))
+    exitDirs.add(dir.toFile)
     dir.toString
+  }
+
+  /** The dirs [[tempDir]] made, all removed by ONE shutdown hook,
+    * installed on first use: a hook per dir would grow the JVM's hook
+    * table by one per checkpoint, spool and replay in a long-lived
+    * session. */
+  private lazy val exitDirs = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+    def rm(f: java.io.File): Unit = {
+      val cs = f.listFiles
+      if (cs != null) cs.foreach(rm)
+      f.delete(): Unit
+    }
+    Runtime.getRuntime.addShutdownHook(new Thread(() => dirs.forEach(rm(_))))
+    dirs
   }
 
   /** Exact-decimal sum rendered as double.

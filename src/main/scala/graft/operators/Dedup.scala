@@ -1397,12 +1397,10 @@ object Dedup {
     // joins/aggregates opt back in to byte-targeted partition
     // coalescing (see Core.withPartitionCoalescing)
     graft.Core.withPartitionCoalescing(edges.sparkSession) {
-      val s = edges.sparkSession
       val ckpt = graft.Core.tempDir("graft-kcore")
       val obs0 = org.apache.spark.sql.Observation("kcore-r0")
-      edges.observe(obs0, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$ckpt/r0")
-      var live = s.read.parquet(s"$ckpt/r0")
+      var live = graft.Core.parquetLeaf(
+        edges.observe(obs0, count(lit(1)).as("n")), s"$ckpt/r0")
       var n = obs0.get("n").asInstanceOf[Long]
       var r = 0
       var converged = false
@@ -1413,11 +1411,11 @@ object Dedup {
           .groupBy("v").agg(count(lit(1)).as("dg"))
         val keep = deg.filter(col("dg") >= k).select("v")
         val obs = org.apache.spark.sql.Observation(s"kcore-r$r")
-        live.join(keep.toDF("a"), Seq("a"), "left_semi")
-          .join(keep.toDF("b"), Seq("b"), "left_semi")
-          .observe(obs, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$ckpt/r$r")
-        live = s.read.parquet(s"$ckpt/r$r")
+        live = graft.Core.parquetLeaf(
+          live.join(keep.toDF("a"), Seq("a"), "left_semi")
+            .join(keep.toDF("b"), Seq("b"), "left_semi")
+            .observe(obs, count(lit(1)).as("n")),
+          s"$ckpt/r$r")
         val n2 = obs.get("n").asInstanceOf[Long]
         converged = n2 == n
         n = n2
@@ -1491,15 +1489,14 @@ object Dedup {
       .select(col("c_custkey"), col("c_name"), col("c_nationkey")))
     val e0 = erEdges(cust, customerStrip(s, d)).select("a", "b")
     val ckpt = graft.Core.tempDir("graft-bfs")
-    e0.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e0.select(col("b").as("src"), col("a").as("dst")))
-      .write.mode("overwrite").parquet(s"$ckpt/adj")
-    val adj = s.read.parquet(s"$ckpt/adj")
+    val adj = graft.Core.parquetLeaf(
+      e0.select(col("a").as("src"), col("b").as("dst"))
+        .unionAll(e0.select(col("b").as("src"), col("a").as("dst"))),
+      s"$ckpt/adj")
     val verts = cached(adj.select(col("src").as("v")).distinct())
-    verts.filter(col("v") % 100 === 0)
-      .select(col("v"), lit(0L).as("dist"))
-      .write.mode("overwrite").parquet(s"$ckpt/d0")
-    var dist = s.read.parquet(s"$ckpt/d0")
+    var dist = graft.Core.parquetLeaf(
+      verts.filter(col("v") % 100 === 0).select(col("v"), lit(0L).as("dist")),
+      s"$ckpt/d0")
     var r = 0
     var n = dist.count()
     var growing = n > 0
@@ -1510,8 +1507,7 @@ object Dedup {
         .select(col("dst").as("v")).distinct()
         .join(dist.select("v"), Seq("v"), "left_anti")
         .select(col("v"), lit(r.toLong).as("dist"))
-      dist.unionAll(next).write.mode("overwrite").parquet(s"$ckpt/d$r")
-      dist = s.read.parquet(s"$ckpt/d$r")
+      dist = graft.Core.parquetLeaf(dist.unionAll(next), s"$ckpt/d$r")
       val n2 = dist.count()
       growing = n2 > n
       n = n2
@@ -1556,14 +1552,13 @@ object Dedup {
       .select(col("c_custkey"), col("c_name"), col("c_nationkey")))
     val e0 = erEdges(cust, customerStrip(s, d)).select("a", "b")
     val ckpt = graft.Core.tempDir("graft-lpa")
-    e0.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e0.select(col("b").as("src"), col("a").as("dst")))
-      .write.mode("overwrite").parquet(s"$ckpt/adj")
-    val adj = s.read.parquet(s"$ckpt/adj")
-    adj.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("lbl"))
-      .write.mode("overwrite").parquet(s"$ckpt/l0")
-    var lbl = s.read.parquet(s"$ckpt/l0")
+    val adj = graft.Core.parquetLeaf(
+      e0.select(col("a").as("src"), col("b").as("dst"))
+        .unionAll(e0.select(col("b").as("src"), col("a").as("dst"))),
+      s"$ckpt/adj")
+    var lbl = graft.Core.parquetLeaf(
+      adj.select(col("src").as("v")).distinct().select(col("v"), col("v").as("lbl")),
+      s"$ckpt/l0")
     for (r <- 1 to LpaRounds) {
       val next = adj.join(lbl.toDF("dst", "nl"), "dst")
         .groupBy(col("src").as("v"), col("nl"))
@@ -1572,8 +1567,7 @@ object Dedup {
         .groupBy("v")
         .agg(max(struct(col("c"), (-col("nl")).as("mn"))).as("g"))
         .select(col("v"), (-col("g.mn")).as("lbl"))
-      next.write.mode("overwrite").parquet(s"$ckpt/l$r")
-      lbl = s.read.parquet(s"$ckpt/l$r")
+      lbl = graft.Core.parquetLeaf(next, s"$ckpt/l$r")
     }
     lbl.groupBy("lbl")
       .agg(count(lit(1)).as("community_size"), sum("v").as("vsum"))

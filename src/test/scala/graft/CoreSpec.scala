@@ -127,6 +127,109 @@ class CoreSpec extends SparkSpec {
     Core.releaseCaches()
   }
 
+  /** A table dir `<root>/<name>.parquet` of `n` Spark-written rows:
+    * a non-nullable `id` and a string column carrying field metadata,
+    * both of which the read must report as inference does. */
+  private def writeTable(root: String, name: String, n: Int, mode: String = "overwrite"): String = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.MetadataBuilder
+    val path = s"$root/$name.parquet"
+    spark.range(n).select(col("id"),
+      col("id").cast("string").as("s", new MetadataBuilder().putString("k", "v").build()))
+      .write.mode(mode).parquet(path)
+    path
+  }
+
+  test("a second Tables read of an unchanged table starts no job and keeps the inferred schema") {
+    val root = Core.tempDir("graft-corespec-tables")
+    val path = writeTable(root, "t", 20)
+    Tables(spark, root, "t")
+    val (again, jobs) = jobsUnder(Tables(spark, root, "t"))
+    assert(jobs.isEmpty, s"a warm Tables read started jobs: $jobs")
+    val want = spark.read.parquet(path).schema
+    assert(again.schema == want, s"${again.schema.treeString} vs ${want.treeString}")
+    assert(again.schema("id").nullable && again.schema("s").metadata.getString("k") == "v")
+    assert(again.count() == 20)
+  }
+
+  test("a table rewritten in place or grown by a file is read with its fresh schema") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val root = Core.tempDir("graft-corespec-tables")
+    val path = writeTable(root, "t", 20)
+    assert(Tables(spark, root, "t").schema("id").dataType == LongType)
+    spark.range(30).select(col("id").cast("int").as("id"), col("id").cast("string").as("s"))
+      .write.mode("overwrite").parquet(path)
+    val retyped = Tables(spark, root, "t")
+    assert(retyped.schema == spark.read.parquet(path).schema)
+    assert(retyped.schema("id").dataType == IntegerType)
+    assert(retyped.count() == 30)
+    writeTable(root, "t", 20)
+    Tables(spark, root, "t")
+    writeTable(root, "t", 5, mode = "append")
+    val grown = Tables(spark, root, "t")
+    assert(grown.schema == spark.read.parquet(path).schema)
+    assert(grown.count() == 25)
+  }
+
+  test("a Tables read under a flipped parquet conf returns that conf's inferred schema") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    // a raw (unannotated) binary column, written without Spark's
+    // schema footer, is the one binaryAsString reinterprets
+    val root = Core.tempDir("graft-corespec-tables")
+    val schema = MessageTypeParser.parseMessageType(
+      "message t { required int64 id; required binary payload; }")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(new Path(s"$root/raw.parquet/part-0.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    val rows = new SimpleGroupFactory(schema)
+    try (0 until 5).foreach(i => w.write(rows.newGroup().append("id", i.toLong).append("payload", s"p$i")))
+    finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      assert(Tables(spark, root, "raw").schema("payload").dataType == BinaryType)
+      spark.conf.set(key, "true")
+      val flipped = Tables(spark, root, "raw")
+      assert(flipped.schema == spark.read.parquet(s"$root/raw.parquet").schema)
+      assert(flipped.schema("payload").dataType == StringType)
+      assert(flipped.orderBy("id").collect().map(_.getString(1)).toSeq == (0 until 5).map(i => s"p$i"))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(Tables(spark, root, "raw").schema("payload").dataType == BinaryType)
+  }
+
+  test("two Tables reads of one table are distinct relations that join on a key") {
+    val root = Core.tempDir("graft-corespec-tables")
+    writeTable(root, "t", 20)
+    val a = Tables(spark, root, "t")
+    val b = Tables(spark, root, "t")
+    assert(a.queryExecution.analyzed.outputSet.intersect(b.queryExecution.analyzed.outputSet).isEmpty)
+    val joined = a.join(b, a("id") === b("id") + 1)
+    assert(joined.count() == 19)
+  }
+
+  test("k-core, BFS and LPA builds start no schema job once their tables are warm") {
+    import graft.operators.Dedup
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "kcore" -> (() => Dedup.kcore(spark, sf)),
+      "bfs" -> (() => Dedup.bfsLevels(spark, sf)),
+      "lpa" -> (() => Dedup.labelProp(spark, sf))).foreach { case (name, build) =>
+      val warm = build().collect()
+      Core.releaseCaches()
+      val (df, jobs) = jobsUnder(build())
+      assert(jobs.nonEmpty && jobs.forall(identity), s"$name build jobs: $jobs")
+      assert(df.collect().toSeq == warm.toSeq, s"$name result changed between builds")
+      Core.releaseCaches()
+    }
+  }
+
   test("every .collect() in src/main is a 1-row limit(1) loop-control read") {
     // The SCALE.md invariant, pinned grep-ably: no DATA-bearing
     // collect may land in the engine. The three legal sites today are
