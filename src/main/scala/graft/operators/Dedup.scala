@@ -3,8 +3,9 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.Core._
 import graft.functions.Vectors
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for an LLM training-data pipeline (north
   * star): exact dedup, MinHash-LSH near-dup over word shingles,
@@ -1830,14 +1831,38 @@ object Dedup {
   // Duplicate-cluster resolution (connected components)
   // -------------------------------------------------------------------
 
-  /** Connected components by synchronous min-label propagation WITH a
-    * pointer-doubling shortcut: each vertex starts labeled with
-    * min(self, neighbors); every round takes the min of (its own
-    * label, its neighbors' labels, and — from round 3 — its LABEL'S
-    * label). The third term is Shiloach–Vishkin-style pointer jumping
-    * — labels form a forest pointing at smaller ids, and following
-    * the pointer's pointer halves chain depth every round, so
-    * convergence is O(log d) rounds instead of O(d) on a long
+  /** Connected components: label every vertex with the min vertex id
+    * of its component.
+    *
+    * Edges: the symmetric edge set is written ONCE to a parquet leaf
+    * through [[graft.Core.parquetLeaf]] — each input row emits both
+    * orientations ([[symmetricEdges]]) — so the upstream plan (for
+    * [[dupClusters]], the whole LSH band join and verify) executes
+    * once, under the session's own settings, and a `Dataset.observe`
+    * on that write counts the directed edges. Every later plan reads
+    * the leaf, never the pair pipeline, so a streaming label fold
+    * keeps a file-rooted plan as its state.
+    *
+    * Local finish ("filtering", MapReduce Algorithms for Big Data
+    * Analysis, VLDB 2012): at or below [[LocalFinishEdges]] directed
+    * edges the labels come from ONE union-find task over
+    * `edges.repartition(1)` — union by the smaller root, so each root
+    * is its component's min vertex id, the iterative path's fixpoint.
+    * The bound is 10⁵ because 10⁵ (long, long) pairs are about
+    * 1.6 MB, which one task holds comfortably; below it the
+    * distributed loop only pays per-round jobs and codegen (on the
+    * perfbench `driver_loops` graph, 22 → 12 jobs a lap). Building this
+    * path starts only the edge write; the union-find runs inside the
+    * consumer's own action. Rounds are reported as 0.
+    *
+    * Iterative path (above the bound): synchronous min-label
+    * propagation WITH a pointer-doubling shortcut: each vertex starts
+    * labeled with min(self, neighbors); every round takes the min of
+    * (its own label, its neighbors' labels, and — from round 3 — its
+    * LABEL'S label). The third term is Shiloach–Vishkin-style pointer
+    * jumping — labels form a forest pointing at smaller ids, and
+    * following the pointer's pointer halves chain depth every round,
+    * so convergence is O(log d) rounds instead of O(d) on a long
     * duplicate chain (the same shortcut the MapReduce
     * large-star/small-star formulation provides; on a 100 TB corpus
     * with chained near-dups this is the difference between ~7 and
@@ -1849,44 +1874,94 @@ object Dedup {
     * same-component values, decrease monotonically, and a stable
     * state forces equality across every edge). Round count is
     * returned so the planted-chain spec pins the logarithmic
-    * behavior.
+    * behavior (through [[iterativeComponents]]).
     *
-    * Scale: the symmetric edge cache is built in ONE pass over
-    * `pairs` — each input row emits both orientations — so the
-    * upstream plan (for [[dupClusters]], the whole LSH band join and
-    * verify) executes once (a union of the two orientations would
-    * plan it twice). Per round, one shuffle join + partial-aggregated
-    * min for the neighbor term plus one label-keyed self-join for the
-    * hop. Each round's labels are CHECKPOINTED to parquet and read
-    * back as a leaf with the written schema (no footer-inference
-    * job), so every round plans against a constant-size tree. This
-    * is load-bearing, not hygiene: each round references the previous
-    * labels THREE times (neighbor join, base, hop), so under plain
-    * caching the analyzed logical plan grows ~3× per round and
-    * Catalyst's per-action analyze/canonicalize work grows
-    * exponentially — measured r12 on a 776-edge graph needing ~10
-    * rounds: round 5 = 2.7 s, round 6 = 52 s, round 7 unreachable,
-    * with execution itself trivial throughout. The parquet round-trip
-    * is the reliable-storage checkpoint every iterative graph system
-    * performs anyway (fault tolerance at 1000 executors), here doing
-    * double duty as the lineage cut. The driver holds only the
+    * Scale: per round, one shuffle join + partial-aggregated min for
+    * the neighbor term plus one label-keyed self-join for the hop,
+    * all over the edge leaf. Each round's labels are CHECKPOINTED to
+    * parquet and read back as a leaf with the written schema (no
+    * footer-inference job), so every round plans against a
+    * constant-size tree. This is load-bearing, not hygiene: each
+    * round references the previous labels THREE times (neighbor
+    * join, base, hop), so under plain caching the analyzed logical
+    * plan grows ~3× per round and Catalyst's per-action
+    * analyze/canonicalize work grows exponentially — measured r12 on
+    * a 776-edge graph needing ~10 rounds: round 5 = 2.7 s, round 6 =
+    * 52 s, round 7 unreachable, with execution itself trivial
+    * throughout. The parquet round-trip is the reliable-storage
+    * checkpoint every iterative graph system performs anyway (fault
+    * tolerance at 1000 executors), here doing double duty as the
+    * lineage cut. The driver holds only the edge count and the
     * converged/not-converged count, never row data.
     *
-    * @param pairs undirected edges, two id columns, each pair once.
-    * @return (labels (v, lbl), rounds until fixpoint) */
+    * @param pairs undirected edges, two non-null id columns, each
+    *              pair once.
+    * @return (labels (v, lbl), both nullable bigint; materialized
+    *         rounds until fixpoint, 0 on the local path) */
   private[graft] def connectedComponents(pairs: DataFrame): (DataFrame, Int) = {
-    // Scale-adaptive shuffle width for the label loop: the session
-    // disables AQE partition coalescing because compute-heavy
-    // small-byte stages (per-row LSH verification folds) serialize
-    // under it — but every CC exchange is a pure hash join/aggregate
-    // over (long, long) rows, exactly the uniform-narrow-row shape
-    // byte-targeted coalescing is FOR. A 10-round chain graph
-    // otherwise pays rounds × ~4 exchanges × full session width in
-    // fixed task overhead on kilobyte shuffles, while at 100 TB the
-    // same plan keeps full width (coalescing is bytes-driven).
-    // Restored after the loop so only its own plans see it.
-    graft.Core.withPartitionCoalescing(pairs.sparkSession)(
-      connectedComponentsLoop(pairs))
+    val (edges, n) = edgeLeaf(pairs)
+    if (n > LocalFinishEdges) iterativeLabels(edges)
+    else {
+      // diagnostic parity with the [stream]/[fuzzy-index] logs: the
+      // path taken separates a local finish from loop rounds in
+      // bench drift
+      System.err.println(s"[cc] local edges=$n")
+      (edges.repartition(1).mapPartitions(unionFindLabels)(Encoders.row(LabelSchema)), 0)
+    }
+  }
+
+  /** Directed edge count at or below which [[connectedComponents]]
+    * finishes in one union-find task (see its scaladoc for the
+    * bound). A constant, not a knob: at scale the iterative path
+    * runs as before. */
+  private val LocalFinishEdges = 100000L
+
+  /** [[connectedComponents]] on the iterative path whatever the
+    * graph's size: the specs compare it with the local finish and
+    * pin its round count on a planted chain. */
+  private[graft] def iterativeComponents(pairs: DataFrame): (DataFrame, Int) =
+    iterativeLabels(edgeLeaf(pairs)._1)
+
+  private val LabelSchema = StructType(Seq(
+    StructField("v", LongType), StructField("lbl", LongType)))
+
+  /** [[symmetricEdges]] of `pairs` written once as a parquet leaf, and
+    * the number of directed edges written. */
+  private def edgeLeaf(pairs: DataFrame): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation("cc-edges")
+    val edges = graft.Core.parquetLeaf(
+      symmetricEdges(pairs).observe(obs, count(lit(1)).as("n")),
+      graft.Core.tempDir("graft-cc-edges"))
+    (edges, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** (v, lbl) for every vertex of the directed `edges` (src, dst)
+    * rows: union-find with path halving where the smaller root always
+    * wins, so each vertex's root is its component's min id. */
+  private def unionFindLabels(edges: Iterator[Row]): Iterator[Row] = {
+    val parent = new scala.collection.mutable.LongMap[Long]
+    def find(v: Long): Long = {
+      var x = v
+      var p = parent(x)
+      while (p != x) {
+        val g = parent(p)
+        parent(x) = g
+        x = g
+        p = parent(x)
+      }
+      x
+    }
+    edges.foreach { e =>
+      val a = e.getLong(0)
+      val b = e.getLong(1)
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent(rb) = ra
+      else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.iterator.map(v => Row(v, find(v)))
   }
 
   /** Both orientations of every undirected pair, as (src, dst), in
@@ -1902,11 +1977,26 @@ object Dedup {
       .select(col("e.src"), col("e.dst"))
   }
 
-  private def connectedComponentsLoop(pairs: DataFrame): (DataFrame, Int) = {
-    val edges = cached(symmetricEdges(pairs))
+  /** The min-label propagation loop over the symmetric edge leaf. */
+  private def iterativeLabels(edges: DataFrame): (DataFrame, Int) =
+    // Scale-adaptive shuffle width for the label loop only (the edge
+    // write above plans under the session's own setting): the
+    // session disables AQE partition coalescing because
+    // compute-heavy small-byte stages (per-row LSH verification
+    // folds) serialize under it — but every CC round exchange is a
+    // pure hash join/aggregate over (long, long) rows, exactly the
+    // uniform-narrow-row shape byte-targeted coalescing is FOR. A
+    // 10-round chain graph otherwise pays rounds × ~4 exchanges ×
+    // full session width in fixed task overhead on kilobyte
+    // shuffles, while at 100 TB the same plan keeps full width
+    // (coalescing is bytes-driven). Restored after the loop so only
+    // its own plans see it.
+    graft.Core.withPartitionCoalescing(edges.sparkSession)(labelRounds(edges))
+
+  private def labelRounds(edges: DataFrame): (DataFrame, Int) = {
     // Head-start initialization: label0 = min(v, min neighbor) is
     // exactly what round 1 of propagation would produce, but costs one
-    // groupBy over the cached edges instead of a join+agg+join round —
+    // groupBy over the edge leaf instead of a join+agg+join round —
     // the loop converges one action earlier. (Every vertex appears as
     // src because edges are symmetrized above.)
     var labels = edges.groupBy(col("src").as("v"))

@@ -1018,7 +1018,7 @@ object Streams {
         Some(labels)
       case Some(lb) =>
         val np = newPairs.toDF("a", "b")
-        // cached: the emptiness probe below and CC's own edge cache
+        // cached: the emptiness probe below and CC's edge-leaf write
         // both read this tiny frame; without the pin the candidate
         // join + verify would run twice
         val mapped = graft.Core.cached(np

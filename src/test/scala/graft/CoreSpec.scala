@@ -66,22 +66,30 @@ class CoreSpec extends SparkSpec {
     * the group started, whether it ran inside a SQL execution. Writes
     * and actions always do; parquet schema inference on
     * `read.parquet` runs its footer job outside one, at planning
-    * time. A sentinel job in a second group drains the listener bus,
-    * which delivers events in order. */
+    * time. */
   private def jobsUnder[T](body: => T): (T, Seq[Boolean]) = {
+    val (out, executions) = executionsUnder(body)
+    (out, executions.map(_.isDefined))
+  }
+
+  /** [[jobsUnder]] with the SQL execution id of each job (None for a
+    * job outside one), so a spec can count the actions `body` ran. A
+    * sentinel job in a second group drains the listener bus, which
+    * delivers events in order. */
+  private def executionsUnder[T](body: => T): (T, Seq[Option[String]]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
     val group = s"corespec-readback-${System.nanoTime}"
     val sentinel = s"$group-end"
-    val inSql = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
         props.map(_.getProperty("spark.jobGroup.id")).orNull match {
           case `group` =>
-            inSql.add(props.exists(_.getProperty("spark.sql.execution.id") != null))
+            executions.add(props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
           case `sentinel` => drained.countDown()
           case _ =>
         }
@@ -94,7 +102,7 @@ class CoreSpec extends SparkSpec {
       sc.setJobGroup(sentinel, "drain")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      (out, inSql.asScala.toSeq)
+      (out, executions.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -117,10 +125,18 @@ class CoreSpec extends SparkSpec {
     assert(ckptJobs.nonEmpty && ckptJobs.forall(identity), s"checkpoint jobs: $ckptJobs")
     sameAsInferred(ckpt)
     assert(!spark.range(1).schema("id").nullable && ckpt.schema("id").nullable)
-    val ((labels, _), ccJobs) = jobsUnder(graft.operators.Dedup.connectedComponents(
-      Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")))
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
+    val ((labels, _), ccJobs) = jobsUnder(graft.operators.Dedup.iterativeComponents(pairs))
     assert(ccJobs.nonEmpty && ccJobs.forall(identity), s"CC jobs: $ccJobs")
     sameAsInferred(labels)
+    // under the local-finish bound the build runs the edge-leaf write
+    // and nothing else: one SQL execution, no loop action; the
+    // union-find labels keep the round leaf's schema
+    val ((local, rounds), localExecutions) =
+      executionsUnder(graft.operators.Dedup.connectedComponents(pairs))
+    assert(rounds == 0 && localExecutions.nonEmpty && localExecutions.forall(_.isDefined) &&
+      localExecutions.distinct.size == 1, s"local CC executions: $localExecutions")
+    assert(local.schema == labels.schema, s"${local.schema.treeString} vs ${labels.schema.treeString}")
     val (spool, streamJobs) = jobsUnder(graft.streaming.Streams.streamWordCount(spark, sf))
     assert(streamJobs.nonEmpty && streamJobs.forall(identity), s"stream jobs: $streamJobs")
     sameAsInferred(spool)

@@ -311,16 +311,65 @@ class DedupSpec extends SparkSpec {
     // assert well under the linear count. Round 1 runs one step and
     // later rounds two, so the loop stops after 5 materialized
     // rounds; the edge multiset alone decides that count, so it is
-    // pinned against edge-construction changes.
+    // pinned against edge-construction changes. This graph is far
+    // below the local-finish bound, so the rounds come from the
+    // iterative entry; the default entry finishes it in one task.
     val chain = (0L until 40L).map(i => (i, i + 1))
     val tri = Seq((100L, 101L), (101L, 102L), (100L, 102L))
     val pairs = (chain ++ tri).toDF("a", "b")
-    val (labels, rounds) = Dedup.connectedComponents(pairs)
+    val (labels, rounds) = Dedup.iterativeComponents(pairs)
     val lbl = labels.as[(Long, Long)].collect().toMap
     (0L to 40L).foreach(v => assert(lbl(v) === 0L))
     Seq(100L, 101L, 102L).foreach(v => assert(lbl(v) === 100L))
     assert(rounds <= 8, s"expected O(log 40) rounds, got $rounds")
     assert(rounds == 5, s"planted chain converged in $rounds rounds, expected 5")
+    val (local, localRounds) = Dedup.connectedComponents(pairs)
+    assert(localRounds == 0)
+    assert(local.as[(Long, Long)].collect().toMap == lbl)
+    Core.releaseCaches()
+  }
+
+  test("union-find labels equal the iterative path's on seeded random graphs") {
+    // random pairs over two id pools, one at 0 and one just below
+    // Long.MaxValue (disjoint components unless a random pair
+    // bridges them), plus a shuffled chain that needs real rounds,
+    // self-loops, duplicate pairs and pairs in both orientations
+    def graph(seed: Int): Seq[(Long, Long)] = {
+      val rnd = new scala.util.Random(seed)
+      val ids = (0L until 30L) ++ (0L until 30L).map(Long.MaxValue - _)
+      def pick() = ids(rnd.nextInt(ids.size))
+      val random = Seq.fill(40)((pick(), pick()))
+      val path = rnd.shuffle((1000L to 1020L).toVector)
+      val chain = path.zip(path.tail)
+      val loops = Seq.fill(3) { val v = pick(); (v, v) }
+      random ++ chain ++ loops ++ random.take(5) ++ random.slice(5, 10).map(_.swap)
+    }
+    // driver-side reference: the min id of each vertex's component
+    def minLabels(es: Seq[(Long, Long)]): Map[Long, Long] = {
+      var lbl = es.flatMap(e => Seq(e._1, e._2)).map(v => v -> v).toMap
+      var changed = true
+      while (changed) {
+        val next = es.foldLeft(lbl) { case (m, (a, b)) =>
+          val l = math.min(m(a), m(b)); m.updated(a, l).updated(b, l)
+        }
+        changed = next != lbl
+        lbl = next
+      }
+      lbl
+    }
+    val nullableLong = org.apache.spark.sql.types.StructType(Seq("v", "lbl").map(
+      org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.LongType)))
+    for (es <- Seq(1, 2, 3).map(graph) :+ Seq.empty[(Long, Long)]) {
+      val pairs = es.toDF("a", "b")
+      val (local, localRounds) = Dedup.connectedComponents(pairs)
+      val (iterative, rounds) = Dedup.iterativeComponents(pairs)
+      assert(localRounds == 0 && rounds >= 1)
+      assert(local.schema == nullableLong && iterative.schema == nullableLong,
+        s"${local.schema.treeString} vs ${iterative.schema.treeString}")
+      val rows = local.as[(Long, Long)].collect().toSeq.sorted
+      assert(rows == iterative.as[(Long, Long)].collect().toSeq.sorted)
+      assert(rows.toMap == minLabels(es) && rows.size == rows.toMap.size)
+    }
     Core.releaseCaches()
   }
 

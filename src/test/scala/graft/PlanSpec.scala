@@ -209,33 +209,67 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("dedup_clusters runs the LSH pipeline once under its CC edge cache") {
+  test("dedup_clusters runs the LSH pipeline once, in its CC edge-leaf write") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
     object aqe extends AdaptiveSparkPlanHelper
-    // the build materializes the edge cache in its first CC round
-    Dedup.dupClusters(spark, sf).collect()
-    // the same frame CC caches; its optimized plan resolves to the cache
-    val edges = Dedup.symmetricEdges(
-      Dedup.minhashLshPairs(spark, sf).select("doc_a", "doc_b"))
-    val cachedPlan = edges.queryExecution.withCachedData match {
-      case r: InMemoryRelation => r.cachedPlan
-      case p => fail(s"CC edge cache not live:\n${p.treeString.take(900)}")
+    // every write the build runs into CC's edge-leaf dir; a sentinel
+    // job drains the shared listener queue, which delivers in order
+    val edgeWrites = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val sentinel = s"planspec-edges-${System.nanoTime}"
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val writes = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        aqe.collect(qe.executedPlan) { case w: DataWritingCommandExec => w }.foreach { w =>
+          w.cmd match {
+            case i: InsertIntoHadoopFsRelationCommand
+                if i.outputPath.toString.contains("graft-cc-edges") => edgeWrites.add(w.child)
+            case _ =>
+          }
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    val drain = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == sentinel))
+          drained.countDown()
+    }
+    spark.listenerManager.register(writes)
+    spark.sparkContext.addSparkListener(drain)
+    val clusters = try {
+      val out = Dedup.dupClusters(spark, sf)
+      spark.sparkContext.setJobGroup(sentinel, "drain")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      out
+    } finally {
+      spark.listenerManager.unregister(writes)
+      spark.sparkContext.removeSparkListener(drain)
+    }
+    assert(edgeWrites.size == 1, s"edge-leaf writes: ${edgeWrites.size}")
+    val writePlan = edgeWrites.peek()
     // the band equi-join, under any join strategy AQE settles on
-    val bandJoins = aqe.collect(cachedPlan) {
+    val bandJoins = aqe.collect(writePlan) {
       case j: BaseJoinExec
           if j.leftKeys.collect { case a: Attribute => a.name } == Seq("band_idx", "band_val") => j
     }
-    assert(bandJoins.size == 1, cachedPlan.toString.take(2000))
-    val rangeSorts = aqe.collect(cachedPlan) {
+    assert(bandJoins.size == 1, writePlan.toString.take(2000))
+    val rangeSorts = aqe.collect(writePlan) {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
     }
-    assert(rangeSorts.isEmpty, cachedPlan.toString.take(2000))
+    assert(rangeSorts.isEmpty, writePlan.toString.take(2000))
+    // the clusters read that leaf and nothing upstream of it
+    assert(clusters.inputFiles.nonEmpty && clusters.inputFiles.forall(_.contains("graft-cc-edges")),
+      clusters.inputFiles.take(3).mkString(", "))
     // the registered pair outputs still sort at the query boundary
     for (df <- Seq(Dedup.minhashLsh(spark, sf), Dedup.ngramJaccard(spark, sf))) {
       aqe.stripAQEPlan(df.queryExecution.executedPlan) match {
