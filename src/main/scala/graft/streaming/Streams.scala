@@ -27,6 +27,19 @@ import java.util.concurrent.atomic.AtomicInteger
   * mode keeps them as state-management metadata, which is the
   * correct posture for a bounded replay check.
   *
+  * Replay folds: the stateful families that keep their own state run
+  * one loop, [[replayFold]]. The caller partitions the input; each
+  * non-empty partition replays as one micro-batch, in partition order
+  * on every run, because the replay files carry strictly increasing
+  * modification times in partition order. Per batch the family's step
+  * maps (state, batch, batchId) to the next state, which is written to
+  * `v<batchId>` and read back with its written schema; a step that
+  * returns None leaves the state as it was. Retries are idempotent: a
+  * re-executed batch recomputes from the same previous version and
+  * overwrites its own `v<batchId>`, and every side log a step writes
+  * is a batchId-keyed slice, overwritten the same way. Each family
+  * keeps only its merge, its side logs and its read-time report.
+  *
   * Scale posture: streaming aggregation state is keyed by
   * (window, type) — cardinality is windows × types, not events; the
   * sessionizer keys state by user_id and buffers only the OPEN
@@ -125,6 +138,45 @@ object Streams {
     val out = graft.Core.parquetLeaf(spark.table(name), spool)
     spark.catalog.dropTempView(name)
     out
+  }
+
+  /** `src` written as a replay directory, one file per non-empty
+    * partition, and read back with its own schema as a stream of one
+    * file per trigger. The file source replays in modification-time
+    * order, and the writer's tasks finish in any order, so the files
+    * are stamped with strictly increasing mtimes in name order, which
+    * is partition order: batch i is partition i on every run. */
+  private def replayStream(src: DataFrame): DataFrame = {
+    val dir = graft.Core.tempDir("graft-replay-src")
+    src.write.mode("overwrite").parquet(dir)
+    val mtBase = System.currentTimeMillis() - 3600000L
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
+        require(f.setLastModified(mtBase + i * 1000L), s"setLastModified failed for $f")
+      }
+    src.sparkSession.readStream.schema(src.schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+  }
+
+  /** Replays `src` ([[replayStream]]) and folds each micro-batch into
+    * the standing state: `step(state, batch, batchId)` returns the next
+    * state, which is written to `<stateRoot>/v<batchId>` through
+    * [[graft.Core.parquetLeaf]], or None to keep the state as it is.
+    * Returns the final state leaf, None if no step produced one. */
+  private[graft] def replayFold(tag: String, src: DataFrame)(
+      step: (Option[DataFrame], DataFrame, Long) => Option[DataFrame]): Option[DataFrame] = {
+    val stateRoot = graft.Core.tempDir("graft-fold-state")
+    @volatile var state: Option[DataFrame] = None
+    val q = replayStream(src).writeStream
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        step(state, batch, batchId).foreach { next =>
+          state = Some(graft.Core.parquetLeaf(next, s"$stateRoot/v$batchId"))
+        }
+      }
+      .start()
+    awaitAndLog(q, tag)
+    state
   }
 
   /** Streaming word count — the reference pipeline lifted onto an
@@ -241,12 +293,7 @@ object Streams {
     * history, and nothing may be dropped when the oracle replays the
     * full corpus. */
   def streamSessionWindow(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-ssw-src")
-    graft.Tables(s, d, "events")
-      .repartitionByRange(4, col("ts"))
-      .write.mode("overwrite").parquet(srcDir)
-    val agg = s.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    val agg = replayStream(graft.Tables(s, d, "events").repartitionByRange(4, col("ts")))
       .withColumn("ets", col("ts").cast("timestamp"))
       .groupBy(col("user_id"), session_window(col("ets"), "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"),
@@ -352,10 +399,9 @@ object Streams {
     * ([[streamSessionize]]) → THIS: the same custom Catalyst operator
     * run per micro-batch with open-session carry-forward state.
     *
-    * Replay: events are split into 4 ts-range slices written
-    * SEQUENTIALLY (strictly increasing file modification times), so
-    * the file source's mod-time ordering replays them in event-time
-    * order — the streaming analogue of an in-order log with
+    * Replay: events are range-partitioned on ts into 4 slices, which
+    * [[replayFold]] replays in partition order, so they arrive in
+    * event-time order — the streaming analogue of an in-order log with
     * watermark = max-event-time (zero allowed lateness across
     * slices). Each micro-batch then:
     *
@@ -374,8 +420,8 @@ object Streams {
     *   3. emits sessions that can no longer grow — `end + gap <
     *      max event ts of the slice` (exactly the event-time-timeout
     *      rule [[streamSessionize]] delegates to Spark's watermark) —
-    *      to a batchId-keyed log (overwrite ⇒ retry-idempotent), and
-    *      carries only the still-open tail as versioned state.
+    *      to a batchId-keyed log, and carries only the still-open
+    *      tail as state.
     *
     * State per user is the folded (start, end, n) open tail — never
     * events; the chain-merge window partitions by user over
@@ -390,94 +436,48 @@ object Streams {
   def streamSessionizeNative(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val gap = GapNs
-    val srcDir = graft.Core.tempDir("graft-sessnat-src")
-    val ev0 = graft.Tables(s, d, "events").select("event_id", "ts", "user_id",
-      "event_type", "value", "props")
-    // quartile boundaries need only be monotone, not exact — any
-    // half-open ts split keeps slices range-ordered, which is all the
-    // closure rule relies on
-    val bounds = ev0
-      .select(graft.Core.epochNs(col("ts").cast("timestamp")).cast("double").as("tsn"))
-      .stat.approxQuantile("tsn", Array(0.25, 0.5, 0.75), 0.01)
-    val cuts = (Double.NegativeInfinity +: bounds.toSeq) :+ Double.PositiveInfinity
-    // The closure rule (end + gap < sliceMax) is only exact if slices
-    // REPLAY in ts order, and the file source orders by modification
-    // time — ms granularity, ties undefined. Encode the order
-    // explicitly: stamp each slice's files with strictly increasing
-    // mod-times (r12 ADVICE; a tie could replay a later slice first
-    // and prematurely close a session).
-    val stamped = scala.collection.mutable.Set[String]()
-    val mtBase = System.currentTimeMillis() - 3600000L
-    cuts.sliding(2).zipWithIndex.foreach { case (pair, sliceIdx) =>
-      val (lo, hi) = (pair(0), pair(1))
-      // [lo, hi) half-open; finite tsn < +Inf always, so the last
-      // slice needs no special case
-      val tsn = graft.Core.epochNs(col("ts").cast("timestamp")).cast("double")
-      ev0.filter(tsn >= lit(lo) && tsn < lit(hi))
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      new java.io.File(srcDir).listFiles().foreach { f =>
-        if (!stamped.contains(f.getName) && !f.getName.startsWith("_") &&
-            !f.getName.startsWith(".")) {
-          require(f.setLastModified(mtBase + sliceIdx * 60000L),
-            s"setLastModified failed for $f")
-          stamped += f.getName
-        }
+    val closedLog = graft.Core.tempDir("graft-sessnat-out")
+    // range partitions on ts replay in ts order and keep equal
+    // timestamps in one slice, which is all the closure rule needs
+    val open = replayFold("streamSessionizeNative",
+        graft.Tables(s, d, "events").repartitionByRange(4, col("ts"))) { (state, batch, batchId) =>
+      val ev = batch
+        .withColumn("tsn", graft.Core.epochNs(col("ts").cast("timestamp")))
+        .select(col("user_id"), col("tsn").as("ts"))
+      val mx = ev.agg(max("ts")).first()
+      if (mx.isNullAt(0)) None
+      else {
+        val sliceMax = mx.getLong(0)
+        val batchSess = graft.plans.SessionAgg(ev, "user_id", "ts", gap)
+          .select("user_id", "start_ns", "end_ns", "n_events")
+        val w = Window.partitionBy("user_id").orderBy("start_ns", "end_ns")
+        val runMaxEnd = max("end_ns")
+          .over(w.rowsBetween(Window.unboundedPreceding, -1))
+        // cached for the closed-log write and the state write
+        val merged = graft.Core.cached(state.fold(batchSess)(_.unionByName(batchSess))
+          .withColumn("brk",
+            when(runMaxEnd.isNull || col("start_ns") > runMaxEnd + gap, 1L)
+              .otherwise(0L))
+          .withColumn("chain",
+            sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0)))
+          .groupBy("user_id", "chain")
+          .agg(min("start_ns").as("start_ns"), max("end_ns").as("end_ns"),
+            sum("n_events").as("n_events"))
+          .select("user_id", "start_ns", "end_ns", "n_events"))
+        merged.filter(col("end_ns") + gap < sliceMax)
+          .write.mode("overwrite").parquet(s"$closedLog/b=$batchId")
+        Some(merged.filter(col("end_ns") + gap >= sliceMax))
       }
     }
-    val stateRoot = graft.Core.tempDir("graft-sessnat-state")
-    val closedLog = graft.Core.tempDir("graft-sessnat-out")
-    @volatile var curState: Option[String] = None
-    val q = s.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ev = batch
-          .withColumn("tsn", graft.Core.epochNs(col("ts").cast("timestamp")))
-          .select(col("user_id"), col("tsn").as("ts"))
-        val mx = ev.agg(max("ts")).first()
-        if (!mx.isNullAt(0)) {
-          val sliceMax = mx.getLong(0)
-          val batchSess = graft.plans.SessionAgg(ev, "user_id", "ts", gap)
-            .select("user_id", "start_ns", "end_ns", "n_events")
-          val combined = curState match {
-            case None    => batchSess
-            case Some(p) => s.read.parquet(p).unionByName(batchSess)
-          }
-          val w = Window.partitionBy("user_id").orderBy("start_ns", "end_ns")
-          val runMaxEnd = max("end_ns")
-            .over(w.rowsBetween(Window.unboundedPreceding, -1))
-          val merged = combined
-            .withColumn("brk",
-              when(runMaxEnd.isNull || col("start_ns") > runMaxEnd + gap, 1L)
-                .otherwise(0L))
-            .withColumn("chain",
-              sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-            .groupBy("user_id", "chain")
-            .agg(min("start_ns").as("start_ns"), max("end_ns").as("end_ns"),
-              sum("n_events").as("n_events"))
-            .select("user_id", "start_ns", "end_ns", "n_events")
-            .cache()
-          merged.filter(col("end_ns") + gap < sliceMax)
-            .write.mode("overwrite").parquet(s"$closedLog/b=$batchId")
-          val next = s"$stateRoot/v$batchId"
-          merged.filter(col("end_ns") + gap >= sliceMax)
-            .write.mode("overwrite").parquet(next)
-          merged.unpersist()
-          curState = Some(next)
-        }
-      }
-      .start()
-    awaitAndLog(q, "streamSessionizeNative")
     // enumerate the b=<id> dirs rather than globbing: a glob path
     // makes the reader probe "<log>/*" for a streaming-sink metadata
     // dir, which logs a spurious FileNotFound WARN per run
     val closedDirs = new java.io.File(closedLog).listFiles()
       .filter(_.isDirectory).map(_.toString).sorted
     // edge corpora guards (r12 ADVICE): an empty events table carries
-    // no batch (curState stays None), and a single-session corpus may
-    // never close a session (closedDirs empty) — both legs fall back
-    // to an empty frame with the session schema
+    // no batch (no state), and a single-session corpus may never
+    // close a session (closedDirs empty) — both legs fall back to an
+    // empty frame with the session schema
     val sessSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("start_ns", LongType),
       StructField("end_ns", LongType), StructField("n_events", LongType)))
@@ -485,8 +485,8 @@ object Streams {
       new java.util.ArrayList[org.apache.spark.sql.Row](), sessSchema)
     val closed =
       if (closedDirs.isEmpty) emptySessions
-      else s.read.parquet(closedDirs.toIndexedSeq: _*)
-    val all = closed.unionByName(curState.fold(emptySessions)(s.read.parquet(_)))
+      else s.read.schema(sessSchema).parquet(closedDirs.toIndexedSeq: _*)
+    val all = closed.unionByName(open.getOrElse(emptySessions))
     all
       .withColumn("session_id", row_number()
         .over(Window.partitionBy("user_id").orderBy("start_ns")).cast("long"))
@@ -675,20 +675,11 @@ object Streams {
     * count), then merges with the current state by the same
     * commutative fold — so the result is independent of batch
     * boundaries and arrival order, which is what makes the pattern
-    * safe under redelivery. State versions are swapped by pointer
-    * (write new dir, then read from it), the no-transactional-table
-    * equivalent of MERGE INTO; at production scale the same closure
-    * targets Delta/Iceberg `MERGE`. The replay is split into 4 files
-    * with `maxFilesPerTrigger=1`, so the merge really runs
+    * safe under redelivery. At production scale the same closure
+    * targets Delta/Iceberg `MERGE`. The replay is split into 4
+    * partitions, one micro-batch each, so the merge really runs
     * incrementally, not as one degenerate batch. */
   def streamUpsertLatest(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-upsert-src")
-    graft.Tables(s, d, "events")
-      .repartitionByRange(4, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-upsert-state")
-    @volatile var curState: Option[String] = None
-
     def fold(df: DataFrame): DataFrame =
       df.groupBy("user_id")
         .agg(
@@ -698,24 +689,12 @@ object Streams {
           col("m.event_type").as("event_type"), col("m.value").as("value"),
           col("n_events"))
 
-    val q = s.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.withColumn("n_events", lit(1L))
-          .select("user_id", "ts", "event_id", "event_type", "value", "n_events")
-        val merged = curState match {
-          case None => fold(b)
-          case Some(p) => fold(s.read.parquet(p).unionByName(b))
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamUpsertLatest")
-    s.read.parquet(curState.get)
+    replayFold("streamUpsertLatest",
+        graft.Tables(s, d, "events").repartitionByRange(4, col("event_id"))) { (state, batch, _) =>
+      val b = batch.withColumn("n_events", lit(1L))
+        .select("user_id", "ts", "event_id", "event_type", "value", "n_events")
+      Some(fold(state.fold(b)(_.unionByName(b))))
+    }.get
       // epoch µs — the integer DuckDB's `epoch_us(ts)` reports (the
       // stored µs timestamp itself decided the argmax above)
       .select(col("user_id"), graft.Core.epochUs(col("ts")).as("last_ts"),
@@ -732,45 +711,20 @@ object Streams {
     * codegen'd buckets the batch path uses, then merges them into the
     * index deduping on (vec_id, tbl) — idempotent under redelivery
     * (bucket ids are deterministic per vector, so a duplicate row is
-    * bit-identical and the dedup is lossless). State versions swap by
-    * pointer exactly like [[streamUpsertLatest]]; at production scale
+    * bit-identical and the dedup is lossless). At production scale
     * the closure is a Delta/Iceberg MERGE with the index partitioned
     * by (tbl, bucket) for probe locality, and each batch touches only
     * its own vectors' entries — never a rebuild. The replay result
     * equals the batch-computed bucket table row for row. */
-  def streamAnnUpsert(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-ann-src")
-    graft.Tables(s, d, "embeddings")
-      .repartitionByRange(4, col("vec_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-ann-state")
-    @volatile var curState: Option[String] = None
-    val embSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val q = s.readStream.schema(embSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val v = graft.functions.Vectors
-        val entries = batch
-          .select(col("vec_id"), posexplode(v.lshBuckets(v.toD(col("embedding")))))
-          .select(col("vec_id"), col("pos").cast("long").as("tbl"), col("col").as("bucket"))
-        val merged = curState match {
-          case None => entries
-          case Some(p) => s.read.parquet(p).unionByName(entries)
-            .dropDuplicates("vec_id", "tbl")
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamAnnUpsert")
-    s.read.parquet(curState.get).orderBy("vec_id", "tbl")
-  }
+  def streamAnnUpsert(s: SparkSession, d: String): DataFrame =
+    replayFold("streamAnnUpsert",
+        graft.Tables(s, d, "embeddings").repartitionByRange(4, col("vec_id"))) { (state, batch, _) =>
+      val v = graft.functions.Vectors
+      val entries = batch
+        .select(col("vec_id"), posexplode(v.lshBuckets(v.toD(col("embedding")))))
+        .select(col("vec_id"), col("pos").cast("long").as("tbl"), col("col").as("bucket"))
+      Some(state.fold(entries)(_.unionByName(entries).dropDuplicates("vec_id", "tbl")))
+    }.get.orderBy("vec_id", "tbl")
 
   /** Streaming winnowing-index maintenance — the hygiene-family
     * analogue of [[streamAnnUpsert]], closing the last batch-only gap
@@ -792,32 +746,13 @@ object Streams {
     * standing index is unioned in as a parquet leaf, never
     * recomputed, and stores 24 bytes/fingerprint. */
   def streamWinnowingPairs(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-win-src")
-    graft.Tables(s, d, "documents")
-      .repartitionByRange(4, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-win-state")
-    @volatile var curState: Option[String] = None
-    val q = s.readStream.schema(documentsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val f = graft.operators.TrainingFilters.winnowFpsOf(batch)
-        val entries = f.select(col("doc_id"), size(col("fps")).as("nf"),
-          explode(col("fps")).as("h"))
-        val merged = curState match {
-          case None => entries
-          case Some(p) => s.read.parquet(p).unionByName(entries)
-            .dropDuplicates("doc_id", "h")
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamWinnowingPairs")
-    val idx = s.read.parquet(curState.get)
+    val idx = replayFold("streamWinnowingPairs",
+        graft.Tables(s, d, "documents").repartitionByRange(4, col("doc_id"))) { (state, batch, _) =>
+      val f = graft.operators.TrainingFilters.winnowFpsOf(batch)
+      val entries = f.select(col("doc_id"), size(col("fps")).as("nf"),
+        explode(col("fps")).as("h"))
+      Some(state.fold(entries)(_.unionByName(entries).dropDuplicates("doc_id", "h")))
+    }.get
     graft.operators.TrainingFilters.winnowPairReport(
       idx.select("doc_id", "h"),
       idx.groupBy("doc_id").agg(max("nf").as("nf")))
@@ -877,33 +812,14 @@ object Streams {
     * events by event_id hash across 4 micro-batches, maintain the
     * per-user merged session spans through [[mergeIntervals]], and
     * return the final state as a (user_id, s_ns, e_ns) frame. */
-  private def replayedIntervals(s: SparkSession, d: String, tag: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-iv-src")
-    graft.Tables(s, d, "events")
-      .repartition(4, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-iv-state")
-    @volatile var curState: Option[String] = None
-    val q = s.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+  private def replayedIntervals(s: SparkSession, d: String, tag: String): DataFrame =
+    replayFold(tag, graft.Tables(s, d, "events").repartition(4, col("event_id"))) {
+      (state, batch, _) =>
         val pts = batch
           .withColumn("ns", graft.Core.epochNs(col("ts").cast("timestamp")))
           .select(col("user_id"), col("ns").as("s_ns"), col("ns").as("e_ns"))
-        val merged = curState match {
-          case None => mergeIntervals(pts)
-          case Some(p) => mergeIntervals(s.read.parquet(p).unionByName(pts))
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, tag)
-    s.read.parquet(curState.get)
-  }
+        Some(mergeIntervals(state.fold(pts)(_.unionByName(pts))))
+    }.get
 
   def streamIntervalOverlap(s: SparkSession, d: String): DataFrame =
     // read-time pairing: identical plan to the batch report; interval
@@ -944,38 +860,20 @@ object Streams {
     * (m1, m2) minima are kept unhashed so the DuckDB oracle replays
     * the identical band keys from the seed constants. */
   def streamDedupNeardup(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-nd-src")
-    graft.Tables(s, d, "documents")
-      .repartitionByRange(4, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-nd-state")
     val bandLog = graft.Core.tempDir("graft-nd-bands")
-    @volatile var curState: Option[String] = None
-    val q = s.readStream.schema(documentsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bands = graft.operators.Dedup.minhashBandRows(batch)
-        // batchId-keyed overwrite, not a blind append: foreachBatch's
-        // contract allows a micro-batch to re-execute after failure,
-        // and a retry must replace its own log slice, not double it
-        // (the log rows are later summed per source).
-        bands.write.mode("overwrite").parquet(s"$bandLog/b=$batchId")
-        val mins = bands
-          .select(col("band_idx"), col("m1"), col("m2"), col("doc_id").as("min_doc"))
-        val merged = (curState match {
-          case None => mins
-          case Some(p) => s.read.parquet(p).unionByName(mins)
-        }).groupBy("band_idx", "m1", "m2").agg(min("min_doc").as("min_doc"))
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamDedupNeardup")
+    val mins = replayFold("streamDedupNeardup",
+        graft.Tables(s, d, "documents").repartitionByRange(4, col("doc_id"))) { (state, batch, batchId) =>
+      val bands = graft.operators.Dedup.minhashBandRows(batch)
+      // the log rows are later summed per source, so a retry must
+      // replace its own slice, not double it
+      bands.write.mode("overwrite").parquet(s"$bandLog/b=$batchId")
+      val m = bands
+        .select(col("band_idx"), col("m1"), col("m2"), col("doc_id").as("min_doc"))
+      Some(state.fold(m)(_.unionByName(m))
+        .groupBy("band_idx", "m1", "m2").agg(min("min_doc").as("min_doc")))
+    }.get
     val adm = s.read.parquet(bandLog)
-      .join(s.read.parquet(curState.get), Seq("band_idx", "m1", "m2"))
+      .join(mins, Seq("band_idx", "m1", "m2"))
       .groupBy("doc_id")
       .agg(min(when(col("min_doc") === col("doc_id"), 1L).otherwise(0L)).as("ok"))
     graft.Tables(s, d, "documents").join(adm, "doc_id")
@@ -999,8 +897,8 @@ object Streams {
     * seen. Per-batch CC work is therefore proportional to the
     * batch's own merges, never the accumulated state, and a batch
     * whose edges all land inside existing components skips the CC
-    * and the state rewrite entirely (returns None; the caller keeps
-    * the standing pointer — the production MERGE-nothing fast path).
+    * and the state rewrite entirely (returns None, which keeps the
+    * standing labels — the production MERGE-nothing fast path).
     *
     * Equivalence to full CC over (stars ∪ new): every standing label
     * is the MIN vertex id of its component (CC's fixpoint), so
@@ -1066,59 +964,38 @@ object Streams {
     * State = the three standing indexes a production incremental
     * dedup service keeps: band index (candidate generation), shingle
     * index (verification), label table (clusters) — each
-    * vocabulary/corpus-keyed, never pair history; per-batch appends
-    * are batchId-keyed for retry idempotence. Per-batch cost is the
+    * vocabulary/corpus-keyed, never pair history. Per-batch cost is the
     * batch's own banding + probe + a few CC rounds on the collapsed
     * graph. */
   def streamDupClusters(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-cl-src")
-    graft.Tables(s, d, "documents")
-      .repartitionByRange(4, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
+    import graft.operators.Dedup
     val bandLog = graft.Core.tempDir("graft-cl-bands")
     val setsLog = graft.Core.tempDir("graft-cl-sets")
-    val labelRoot = graft.Core.tempDir("graft-cl-labels")
-    @volatile var curLabels: Option[String] = None
-    val q = s.readStream.schema(documentsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.Dedup
-        val sets = Dedup.wordSetsOf(batch)
-        val bands = Dedup.minhashBandRows(batch)
-        sets.write.mode("overwrite").parquet(s"$setsLog/b=$batchId")
-        bands.write.mode("overwrite").parquet(s"$bandLog/b=$batchId")
-        // candidates: batch bands vs ALL bands seen so far (incl. own
-        // batch — the log already contains this batch's slice)
-        val allBands = s.read.parquet(bandLog)
-          .select(col("band_idx"), col("m1"), col("m2"), col("doc_id").as("doc_b"))
-        val cand = bands
-          .select(col("band_idx"), col("m1"), col("m2"), col("doc_id").as("doc_a"))
-          .join(allBands, Seq("band_idx", "m1", "m2"))
-          .filter(col("doc_a") =!= col("doc_b"))
-          .select(least(col("doc_a"), col("doc_b")).as("a"),
-            greatest(col("doc_a"), col("doc_b")).as("b"))
-          .distinct()
-        val allSets = s.read.parquet(setsLog)
-        val newPairs = cand
-          .join(allSets.select(col("doc_id").as("a"), col("sh").as("sh_a")), "a")
-          .join(allSets.select(col("doc_id").as("b"), col("sh").as("sh_b")), "b")
-          .filter(Dedup.jaccard(col("sh_a"), col("sh_b")) >= 0.8)
-          .select("a", "b")
-        // fold the verified pairs into the standing labels through
-        // the component-merge graph (see [[foldEdgesIntoLabels]]);
-        // a batch that merges nothing keeps the standing pointer
-        foldEdgesIntoLabels(curLabels.map(p => s.read.parquet(p)), newPairs)
-          .foreach { labels =>
-            val next = s"$labelRoot/v$batchId"
-            labels.write.mode("overwrite").parquet(next)
-            curLabels = Some(next)
-          }
-      }
-      .start()
-    awaitAndLog(q, "streamDupClusters")
-    val labels = s.read.parquet(curLabels.get)
+    val labels = replayFold("streamDupClusters",
+        graft.Tables(s, d, "documents").repartitionByRange(4, col("doc_id"))) { (state, batch, batchId) =>
+      val sets = Dedup.wordSetsOf(batch)
+      val bands = Dedup.minhashBandRows(batch)
+      sets.write.mode("overwrite").parquet(s"$setsLog/b=$batchId")
+      bands.write.mode("overwrite").parquet(s"$bandLog/b=$batchId")
+      // candidates: batch bands vs ALL bands seen so far (incl. own
+      // batch — the log already contains this batch's slice)
+      val allBands = s.read.parquet(bandLog)
+        .select(col("band_idx"), col("m1"), col("m2"), col("doc_id").as("doc_b"))
+      val cand = bands
+        .select(col("band_idx"), col("m1"), col("m2"), col("doc_id").as("doc_a"))
+        .join(allBands, Seq("band_idx", "m1", "m2"))
+        .filter(col("doc_a") =!= col("doc_b"))
+        .select(least(col("doc_a"), col("doc_b")).as("a"),
+          greatest(col("doc_a"), col("doc_b")).as("b"))
+        .distinct()
+      val allSets = s.read.parquet(setsLog)
+      val newPairs = cand
+        .join(allSets.select(col("doc_id").as("a"), col("sh").as("sh_a")), "a")
+        .join(allSets.select(col("doc_id").as("b"), col("sh").as("sh_b")), "b")
+        .filter(Dedup.jaccard(col("sh_a"), col("sh_b")) >= 0.8)
+        .select("a", "b")
+      foldEdgesIntoLabels(state, newPairs)
+    }.get
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "lbl")
       .select(col("v").as("doc_id"), col("lbl").as("cluster_id"),
@@ -1151,55 +1028,31 @@ object Streams {
     * (the [[streamDupClusters]] argument verbatim). */
   def streamErGolden(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Dedup
-    val srcDir = graft.Core.tempDir("graft-er-src")
-    graft.Tables(s, d, "customer")
+    def customers = graft.Tables(s, d, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_nationkey"))
-      .repartition(4, col("c_custkey"))
-      .write.mode("overwrite").parquet(srcDir)
-    val sch = s.read.parquet(srcDir).schema
     val blockLog = graft.Core.tempDir("graft-er-blocks")
-    val labelRoot = graft.Core.tempDir("graft-er-labels")
-    @volatile var curLabels: Option[String] = None
-    val q = s.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rows = Dedup.erBlockRows(s, d, batch)
-        // batchId-keyed for retry idempotence: a replayed batch
-        // overwrites its own slice, never duplicates it
-        rows.write.mode("overwrite").parquet(s"$blockLog/b=$batchId")
-        // candidates: batch rows vs ALL rows seen so far (incl. own
-        // batch — the log already contains this batch's slice), so
-        // every pair fires when its LATER member arrives
-        val all = s.read.parquet(blockLog)
-          .select(col("c_custkey").as("b"), col("c_nationkey").as("nb"),
-            col("core").as("core_b"), col("h"))
-        val newEdges = rows
-          .select(col("c_custkey").as("a"), col("c_nationkey").as("na"),
-            col("core").as("core_a"), col("h"))
-          .join(all, Seq("h"))
-          .filter(col("a") =!= col("b") && col("na") === col("nb"))
-          .filter(levenshtein(col("core_a"), col("core_b"), 1) =!= -1)
-          .select(least(col("a"), col("b")).as("a"),
-            greatest(col("a"), col("b")).as("b"))
-          .distinct()
-        // fold the new match edges into the standing labels through
-        // the component-merge graph (see [[foldEdgesIntoLabels]]);
-        // a batch that merges nothing keeps the standing pointer
-        foldEdgesIntoLabels(curLabels.map(p => s.read.parquet(p)), newEdges)
-          .foreach { labels =>
-            val next = s"$labelRoot/v$batchId"
-            labels.write.mode("overwrite").parquet(next)
-            curLabels = Some(next)
-          }
-      }
-      .start()
-    awaitAndLog(q, "streamErGolden")
-    Dedup.goldenSurvivorship(
-      graft.Tables(s, d, "customer")
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_nationkey")),
-      s.read.parquet(curLabels.get))
+    val labels = replayFold("streamErGolden",
+        customers.repartition(4, col("c_custkey"))) { (state, batch, batchId) =>
+      val rows = Dedup.erBlockRows(s, d, batch)
+      rows.write.mode("overwrite").parquet(s"$blockLog/b=$batchId")
+      // candidates: batch rows vs ALL rows seen so far (incl. own
+      // batch — the log already contains this batch's slice), so
+      // every pair fires when its LATER member arrives
+      val all = s.read.parquet(blockLog)
+        .select(col("c_custkey").as("b"), col("c_nationkey").as("nb"),
+          col("core").as("core_b"), col("h"))
+      val newEdges = rows
+        .select(col("c_custkey").as("a"), col("c_nationkey").as("na"),
+          col("core").as("core_a"), col("h"))
+        .join(all, Seq("h"))
+        .filter(col("a") =!= col("b") && col("na") === col("nb"))
+        .filter(levenshtein(col("core_a"), col("core_b"), 1) =!= -1)
+        .select(least(col("a"), col("b")).as("a"),
+          greatest(col("a"), col("b")).as("b"))
+        .distinct()
+      foldEdgesIntoLabels(state, newEdges)
+    }.get
+    Dedup.goldenSurvivorship(customers, labels)
   }
 
   /** Streaming LM-STATISTICS maintenance — the streaming twin of the
@@ -1223,32 +1076,14 @@ object Streams {
   def streamLmPerplexity(s: SparkSession, d: String): DataFrame = {
     import graft.operators.TrainingFilters
     val bucket = polyHash(col("text")) % 100
-    val srcDir = graft.Core.tempDir("graft-lm-src")
-    graft.Tables(s, d, "documents").filter(bucket < 80)
-      .repartition(4, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val sch = s.read.parquet(srcDir).schema
-    val stateRoot = graft.Core.tempDir("graft-lm-state")
-    @volatile var curState: Option[String] = None
-    val q = s.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val counts = TrainingFilters.trigramCounts(batch)
-        val merged = curState match {
-          case None => counts
-          case Some(p) => s.read.parquet(p).unionByName(counts)
-            .groupBy("w1", "w2", "w3").agg(sum(col("c123")).as("c123"))
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamLmPerplexity")
-    TrainingFilters.knPerplexityScore(
-      s.read.parquet(curState.get),
+    val counts = replayFold("streamLmPerplexity",
+        graft.Tables(s, d, "documents").filter(bucket < 80)
+          .repartition(4, col("doc_id"))) { (state, batch, _) =>
+      val c = TrainingFilters.trigramCounts(batch)
+      Some(state.fold(c)(_.unionByName(c)
+        .groupBy("w1", "w2", "w3").agg(sum(col("c123")).as("c123"))))
+    }.get
+    TrainingFilters.knPerplexityScore(counts,
       graft.Tables(s, d, "documents").filter(bucket >= 80))
   }
 
@@ -1268,51 +1103,27 @@ object Streams {
     * `er_fellegi_sunter`'s oracle serves both.
     *
     * Scale: state is 8 longs; the pair log is nation-blocked exactly
-    * like the batch query (bounded by block density); versioned state
-    * files make batch retries idempotent (a replayed batch recomputes
-    * from the previous version, like [[streamSpanIngest]]). */
+    * like the batch query (bounded by block density). */
   def streamErFellegi(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Dedup
-    val srcDir = graft.Core.tempDir("graft-fs-src")
-    graft.Tables(s, d, "customer")
-      .repartition(4, col("c_custkey"))
-      .write.mode("overwrite").parquet(srcDir)
-    val sch = s.read.parquet(srcDir).schema
     val recsLog = graft.Core.tempDir("graft-fs-recs")
     val pairLog = graft.Core.tempDir("graft-fs-pairs")
-    val muRoot = graft.Core.tempDir("graft-fs-mu")
-    @volatile var curMu: Option[String] = None
-    val q = s.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$recsLog/b=$batchId")
-        val inPairs = Dedup.fsPairFeatures(batch, batch, ordered = true)
-        val newPairs =
-          if (batchId == 0) inPairs
-          else {
-            val older = s.read.parquet(recsLog)
-              .filter(col("b") < batchId).drop("b")
-            Dedup.fsPairFeatures(batch, older, ordered = false)
-              .unionByName(inPairs)
-          }
-        newPairs.write.mode("overwrite").parquet(s"$pairLog/b=$batchId")
-        val muBatch = Dedup.fsMu(
-          s.read.parquet(s"$pairLog/b=$batchId"))
-        val muNext = curMu match {
-          case None => muBatch
-          case Some(p) => Dedup.fsMuMerge(s.read.parquet(p), muBatch)
+    val mu = replayFold("streamErFellegi",
+        graft.Tables(s, d, "customer").repartition(4, col("c_custkey"))) { (state, batch, batchId) =>
+      batch.write.mode("overwrite").parquet(s"$recsLog/b=$batchId")
+      val inPairs = Dedup.fsPairFeatures(batch, batch, ordered = true)
+      val newPairs =
+        if (batchId == 0) inPairs
+        else {
+          val older = s.read.parquet(recsLog)
+            .filter(col("b") < batchId).drop("b")
+          Dedup.fsPairFeatures(batch, older, ordered = false)
+            .unionByName(inPairs)
         }
-        val next = s"$muRoot/v$batchId"
-        muNext.write.mode("overwrite").parquet(next)
-        curMu = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamErFellegi")
-    Dedup.fsTail(
-      s.read.parquet(pairLog).drop("b"),
-      s.read.parquet(curMu.get))
+      val muBatch = Dedup.fsMu(graft.Core.parquetLeaf(newPairs, s"$pairLog/b=$batchId"))
+      Some(state.fold(muBatch)(Dedup.fsMuMerge(_, muBatch)))
+    }.get
+    Dedup.fsTail(s.read.parquet(pairLog).drop("b"), mu)
   }
 
   /** Streaming ER match-EVIDENCE maintenance — the third member of
@@ -1343,43 +1154,33 @@ object Streams {
     * the report-time CC is O(log d) rounds over match edges only. */
   def streamErConfidence(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Dedup
-    val srcDir = graft.Core.tempDir("graft-erc-src")
-    graft.Tables(s, d, "customer")
+    def customers = graft.Tables(s, d, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_nationkey"))
-      .repartition(4, col("c_custkey"))
-      .write.mode("overwrite").parquet(srcDir)
-    val sch = s.read.parquet(srcDir).schema
     val blockLog = graft.Core.tempDir("graft-erc-blocks")
     val edgeLog = graft.Core.tempDir("graft-erc-edges")
-    val q = s.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rows = Dedup.erBlockRows(s, d, batch)
-        rows.write.mode("overwrite").parquet(s"$blockLog/b=$batchId")
-        val all = s.read.parquet(blockLog)
-          .select(col("c_custkey").as("b"), col("c_nationkey").as("nb"),
-            col("core").as("core_b"), col("h"))
-        val newEdges = rows
-          .select(col("c_custkey").as("a"), col("c_nationkey").as("na"),
-            col("core").as("core_a"), col("h"))
-          .join(all, Seq("h"))
-          .filter(col("a") =!= col("b") && col("na") === col("nb"))
-          .filter(levenshtein(col("core_a"), col("core_b"), 1) =!= -1)
-          .select(least(col("a"), col("b")).as("a"),
-            greatest(col("a"), col("b")).as("b"))
-          .distinct()
-        // score at match time against the record store (srcDir is
-        // the stream's own source) and persist the evidence row;
-        // batchId-keyed so a replayed batch overwrites its own slice
-        Dedup.erEdgeSims(
-          s.read.parquet(srcDir).select(col("c_custkey"), col("c_name")),
-          newEdges)
-          .write.mode("overwrite").parquet(s"$edgeLog/bat=$batchId")
-      }
-      .start()
-    awaitAndLog(q, "streamErConfidence")
+    // the edge log is the whole state, so every step keeps None
+    replayFold("streamErConfidence",
+        customers.repartition(4, col("c_custkey"))) { (_, batch, batchId) =>
+      val rows = Dedup.erBlockRows(s, d, batch)
+      rows.write.mode("overwrite").parquet(s"$blockLog/b=$batchId")
+      val all = s.read.parquet(blockLog)
+        .select(col("c_custkey").as("b"), col("c_nationkey").as("nb"),
+          col("core").as("core_b"), col("h"))
+      val newEdges = rows
+        .select(col("c_custkey").as("a"), col("c_nationkey").as("na"),
+          col("core").as("core_a"), col("h"))
+        .join(all, Seq("h"))
+        .filter(col("a") =!= col("b") && col("na") === col("nb"))
+        .filter(levenshtein(col("core_a"), col("core_b"), 1) =!= -1)
+        .select(least(col("a"), col("b")).as("a"),
+          greatest(col("a"), col("b")).as("b"))
+        .distinct()
+      // score at match time against the record store (the stream's
+      // own source table) and persist the evidence row
+      Dedup.erEdgeSims(customers.select(col("c_custkey"), col("c_name")), newEdges)
+        .write.mode("overwrite").parquet(s"$edgeLog/bat=$batchId")
+      None
+    }
     Dedup.erConfidenceReport(s.read.parquet(edgeLog).drop("bat"))
   }
 
@@ -1390,39 +1191,21 @@ object Streams {
     * K-gram overlap): each micro-batch explodes into its K-gram rows
     * ([[graft.operators.SpanDedup.gramRows]]); the standing state is
     * the gram VOCABULARY with corpus counts — never documents, never
-    * history — merged forward per batch, and the per-batch gram log
-    * is batchId-keyed for retry idempotence. Admission is a pure
+    * history — merged forward per batch, next to a per-batch gram
+    * log. Admission is a pure
     * function of the FINAL counts (a doc passes iff none of its
     * grams reached corpus count ≥ 2), so any arrival order converges
     * to the batch recomputation the oracle runs. */
   def streamSpanIngest(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-span-src")
-    graft.Tables(s, d, "documents")
-      .repartitionByRange(4, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-span-state")
     val gramLog = graft.Core.tempDir("graft-span-log")
-    @volatile var curState: Option[String] = None
-    val q = s.readStream.schema(documentsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val g = graft.operators.SpanDedup.gramRows(batch).select("doc_id", "g")
-        g.write.mode("overwrite").parquet(s"$gramLog/b=$batchId")
-        val counts = g.groupBy("g").agg(count(lit(1)).as("n"))
-        val merged = (curState match {
-          case None => counts
-          case Some(p) => s.read.parquet(p).unionByName(counts)
-            .groupBy("g").agg(sum(col("n")).as("n"))
-        })
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamSpanIngest")
-    val rep = s.read.parquet(curState.get).filter(col("n") >= 2).select("g")
+    val counts = replayFold("streamSpanIngest",
+        graft.Tables(s, d, "documents").repartitionByRange(4, col("doc_id"))) { (state, batch, batchId) =>
+      val g = graft.operators.SpanDedup.gramRows(batch).select("doc_id", "g")
+      g.write.mode("overwrite").parquet(s"$gramLog/b=$batchId")
+      val c = g.groupBy("g").agg(count(lit(1)).as("n"))
+      Some(state.fold(c)(_.unionByName(c).groupBy("g").agg(sum(col("n")).as("n"))))
+    }.get
+    val rep = counts.filter(col("n") >= 2).select("g")
     val dirty = s.read.parquet(gramLog).join(rep, "g")
       .select("doc_id").distinct().withColumn("dirty", lit(1L))
     graft.Tables(s, d, "documents").join(dirty, Seq("doc_id"), "left")
@@ -1444,36 +1227,16 @@ object Streams {
     * arrival order converges to the batch recomputation the oracle
     * runs. */
   def streamPhashIngest(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-ph-src")
-    graft.Tables(s, d, "documents")
-      .repartitionByRange(4, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-ph-state")
     val hashLog = graft.Core.tempDir("graft-ph-log")
-    @volatile var curState: Option[String] = None
-    val q = s.readStream.schema(documentsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val hashes = graft.operators.Multimodal.phashOf(batch)
-        // batchId-keyed overwrite for retry idempotence (see bandLog
-        // note in streamDedupNeardup) — a re-executed batch replaces
-        // its own slice instead of double-appending admissions.
-        hashes.write.mode("overwrite").parquet(s"$hashLog/b=$batchId")
-        val mins = hashes.select(col("dhash"), col("doc_id").as("min_doc"))
-        val merged = (curState match {
-          case None => mins
-          case Some(p) => s.read.parquet(p).unionByName(mins)
-        }).groupBy("dhash").agg(min("min_doc").as("min_doc"))
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamPhashIngest")
+    val mins = replayFold("streamPhashIngest",
+        graft.Tables(s, d, "documents").repartitionByRange(4, col("doc_id"))) { (state, batch, batchId) =>
+      val hashes = graft.operators.Multimodal.phashOf(batch)
+      hashes.write.mode("overwrite").parquet(s"$hashLog/b=$batchId")
+      val m = hashes.select(col("dhash"), col("doc_id").as("min_doc"))
+      Some(state.fold(m)(_.unionByName(m)).groupBy("dhash").agg(min("min_doc").as("min_doc")))
+    }.get
     val adm = s.read.parquet(hashLog)
-      .join(s.read.parquet(curState.get), "dhash")
+      .join(mins, "dhash")
       .select(col("doc_id"),
         (col("min_doc") === col("doc_id")).cast("long").as("ok"))
     graft.Tables(s, d, "documents").join(adm, "doc_id")
@@ -1495,31 +1258,13 @@ object Streams {
     * exact count plus a bool that the merged estimate landed within
     * 8% — oracle emits the exact count and literal TRUE. */
   def streamHllUsers(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-hll-src")
-    graft.Tables(s, d, "events")
-      .repartitionByRange(4, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-hll-state")
-    @volatile var curState: Option[String] = None
-    val q = s.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sk = batch.groupBy("event_type")
-          .agg(expr("hll_sketch_agg(user_id)").as("sk"))
-        val merged = curState match {
-          case None => sk
-          case Some(p) => s.read.parquet(p).unionByName(sk)
-            .groupBy("event_type").agg(expr("hll_union_agg(sk)").as("sk"))
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamHllUsers")
-    val est = s.read.parquet(curState.get)
+    val est = replayFold("streamHllUsers",
+        graft.Tables(s, d, "events").repartitionByRange(4, col("event_id"))) { (state, batch, _) =>
+      val sk = batch.groupBy("event_type")
+        .agg(expr("hll_sketch_agg(user_id)").as("sk"))
+      Some(state.fold(sk)(_.unionByName(sk)
+        .groupBy("event_type").agg(expr("hll_union_agg(sk)").as("sk"))))
+    }.get
       .select(col("event_type"), expr("hll_sketch_estimate(sk)").as("est"))
     val exact = graft.Tables(s, d, "events")
       .groupBy("event_type").agg(countDistinct(col("user_id")).as("exact_users"))
@@ -1626,35 +1371,17 @@ object Streams {
     * is k longs, batches shuffle only their own sketch partials. */
   def streamKmvUsers(s: SparkSession, d: String): DataFrame = {
     val k = 64
-    val srcDir = graft.Core.tempDir("graft-kmv-src")
-    graft.Tables(s, d, "events")
-      .repartitionByRange(4, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-kmv-state")
-    @volatile var curState: Option[String] = None
     val skc = graft.plans.Sketches
     val h = (lit(skc.seedA(40)) * col("user_id") + lit(skc.seedB(40))) % skc.P
     def fold(pairs: DataFrame): DataFrame = pairs
       .groupBy("event_type")
       .agg(skc.minKHashes(col("h"), k).as("sk"))
       .select(col("event_type"), explode(col("sk")).as("h"))
-    val q = s.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bp = batch.select(col("event_type"), h.as("h"))
-        val merged = curState match {
-          case None => fold(bp)
-          case Some(p) => fold(s.read.parquet(p).unionByName(bp))
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamKmvUsers")
-    s.read.parquet(curState.get)
+    replayFold("streamKmvUsers",
+        graft.Tables(s, d, "events").repartitionByRange(4, col("event_id"))) { (state, batch, _) =>
+      val bp = batch.select(col("event_type"), h.as("h"))
+      Some(fold(state.fold(bp)(_.unionByName(bp))))
+    }.get
       .groupBy("event_type")
       .agg(skc.minKHashes(col("h"), k).as("sk"))
       .select(col("event_type"), size(col("sk")).as("n_sketch"),
@@ -1736,12 +1463,6 @@ object Streams {
     * the LTV twin count active users. */
   private def dayCentsStateFold(s: SparkSession, d: String,
       tag: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-cuped-src")
-    graft.Tables(s, d, "events")
-      .repartitionByRange(4, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-cuped-state")
-    @volatile var curState: Option[String] = None
     def dayCents(df: DataFrame): DataFrame = df
       .select(col("user_id"),
         round(col("value") * 100).cast("long").as("cents"),
@@ -1751,25 +1472,13 @@ object Streams {
       .withColumn("day", expr("us div 86400000000"))
       .groupBy("user_id", "day")
       .agg(sum("cents").as("cents"), sum("pcents").as("pcents"))
-    val q = s.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bp = dayCents(batch)
-        val merged = curState match {
-          case None => bp
-          case Some(p) => s.read.parquet(p).unionByName(bp)
-            .groupBy("user_id", "day")
-            .agg(sum("cents").as("cents"), sum("pcents").as("pcents"))
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, tag)
-    s.read.parquet(curState.get)
+    replayFold(tag,
+        graft.Tables(s, d, "events").repartitionByRange(4, col("event_id"))) { (state, batch, _) =>
+      val bp = dayCents(batch)
+      Some(state.fold(bp)(_.unionByName(bp)
+        .groupBy("user_id", "day")
+        .agg(sum("cents").as("cents"), sum("pcents").as("pcents"))))
+    }.get
   }
 
   def streamAbCuped(s: SparkSession, d: String): DataFrame =
@@ -1797,34 +1506,16 @@ object Streams {
     * interval-contribution report runs at read time through the SAME
     * plan as the batch operator. */
   def streamRollingDistinct(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-roll-src")
-    graft.Tables(s, d, "events")
-      .repartitionByRange(4, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-roll-state")
-    @volatile var curState: Option[String] = None
     val NsPerDay = 86400L * 1000000000L
     def pairs(df: DataFrame): DataFrame = df
       .select(col("user_id"), graft.Core.epochNs(col("ts")).as("ns"))
       .select(col("user_id"), expr(s"ns div $NsPerDay").as("day"))
       .distinct()
-    val q = s.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bp = pairs(batch)
-        val merged = curState match {
-          case None => bp
-          case Some(p) => s.read.parquet(p).unionByName(bp).distinct()
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamRollingDistinct")
-    graft.operators.Events.rollingFromPairs(s.read.parquet(curState.get))
+    graft.operators.Events.rollingFromPairs(replayFold("streamRollingDistinct",
+        graft.Tables(s, d, "events").repartitionByRange(4, col("event_id"))) { (state, batch, _) =>
+      val bp = pairs(batch)
+      Some(state.fold(bp)(_.unionByName(bp).distinct()))
+    }.get)
   }
 
   /** Streaming equi-depth histogram maintenance — the LAST additive
@@ -1832,41 +1523,21 @@ object Streams {
     * sibling): the maintained state is the (cents, cnt) FREQUENCY
     * table — integer counts, associative and commutative, so any
     * batch split folds to the same state, with batchId-keyed
-    * versions making redelivery idempotent (v_b derives from
-    * v_{b−1} and a re-driven micro-batch overwrites its own
-    * version). The histogram derives at READ time through
+    * versions making redelivery idempotent. The histogram derives at
+    * READ time through
     * [[graft.operators.Quality.equidepthFromFreqs]] — exact batch
     * parity because per-bucket counts depend only on the value
     * multiset, so one oracle serves both. State size is |distinct
     * cents values|, never event history. */
   def streamEquidepth(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-eqd-src")
-    graft.Tables(s, d, "events")
-      .repartitionByRange(4, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-eqd-state")
-    @volatile var curState: Option[String] = None
     def freqs(df: DataFrame): DataFrame = df
       .select(floor(col("value") * 100 + 0.5).cast("long").as("v"))
       .groupBy("v").agg(count(lit(1)).as("cnt"))
-    val q = s.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bp = freqs(batch)
-        val merged = curState match {
-          case None => bp
-          case Some(p) => s.read.parquet(p).unionByName(bp)
-            .groupBy("v").agg(sum("cnt").as("cnt"))
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamEquidepth")
-    graft.operators.Quality.equidepthFromFreqs(s.read.parquet(curState.get))
+    graft.operators.Quality.equidepthFromFreqs(replayFold("streamEquidepth",
+        graft.Tables(s, d, "events").repartitionByRange(4, col("event_id"))) { (state, batch, _) =>
+      val bp = freqs(batch)
+      Some(state.fold(bp)(_.unionByName(bp).groupBy("v").agg(sum("cnt").as("cnt"))))
+    }.get)
   }
 
   /** Streaming autocorrelation maintenance — the time-series sibling
@@ -1878,35 +1549,16 @@ object Streams {
     * daily series alone, so the batch oracle serves both. State is
     * |days| rows, never event history. */
   def streamAcf(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-acf-src")
-    graft.Tables(s, d, "events")
-      .repartitionByRange(4, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-acf-state")
-    @volatile var curState: Option[String] = None
     def daily(df: DataFrame): DataFrame = df
       .select(graft.Core.epochUs(col("ts")).as("us"),
         round(col("value") * 100).cast("long").as("cents"))
       .groupBy(expr("us div 86400000000").as("day"))
       .agg(sum("cents").as("x"))
-    val q = s.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bp = daily(batch)
-        val merged = curState match {
-          case None => bp
-          case Some(p) => s.read.parquet(p).unionByName(bp)
-            .groupBy("day").agg(sum("x").as("x"))
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamAcf")
-    graft.operators.Events.acfFromDaily(s.read.parquet(curState.get))
+    graft.operators.Events.acfFromDaily(replayFold("streamAcf",
+        graft.Tables(s, d, "events").repartitionByRange(4, col("event_id"))) { (state, batch, _) =>
+      val bp = daily(batch)
+      Some(state.fold(bp)(_.unionByName(bp).groupBy("day").agg(sum("x").as("x"))))
+    }.get)
   }
 
   /** Streaming Kaplan–Meier maintenance — the MIN-fold state family
@@ -1918,12 +1570,6 @@ object Streams {
     * through [[graft.operators.Events.kmFromUserDays]] — exact batch
     * parity, one shared oracle. State is |users| rows. */
   def streamKaplanMeier(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-km-src")
-    graft.Tables(s, d, "events")
-      .repartitionByRange(4, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-km-state")
-    @volatile var curState: Option[String] = None
     def fold(df: DataFrame): DataFrame = df
       .select(col("user_id"), col("event_type"),
         graft.Core.epochUs(col("ts")).as("us"))
@@ -1932,25 +1578,12 @@ object Streams {
       .groupBy("user_id")
       .agg(min("day").as("d0"),
         min(when(col("event_type") === "purchase", col("day"))).as("dp"))
-    val q = s.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bp = fold(batch)
-        val merged = curState match {
-          case None => bp
-          case Some(p) => s.read.parquet(p).unionByName(bp)
-            .groupBy("user_id")
-            .agg(min("d0").as("d0"), min("dp").as("dp"))
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamKaplanMeier")
-    graft.operators.Events.kmFromUserDays(s.read.parquet(curState.get))
+    graft.operators.Events.kmFromUserDays(replayFold("streamKaplanMeier",
+        graft.Tables(s, d, "events").repartitionByRange(4, col("event_id"))) { (state, batch, _) =>
+      val bp = fold(batch)
+      Some(state.fold(bp)(_.unionByName(bp)
+        .groupBy("user_id").agg(min("d0").as("d0"), min("dp").as("dp"))))
+    }.get)
   }
 
   /** Streaming weighted-median maintenance over a LINEITEM feed —
@@ -1962,68 +1595,17 @@ object Streams {
     * through [[graft.operators.Quality.weightedMedianFromFreq]] —
     * exact batch parity, one shared oracle. */
   def streamWeightedMedian(s: SparkSession, d: String): DataFrame = {
-    val srcDir = graft.Core.tempDir("graft-wmed-src")
-    val li = graft.Tables(s, d, "lineitem")
-    li.repartitionByRange(4, col("l_orderkey"), col("l_linenumber"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stateRoot = graft.Core.tempDir("graft-wmed-state")
-    @volatile var curState: Option[String] = None
     def fold(df: DataFrame): DataFrame = df
       .select(col("l_returnflag").as("flag"),
         round(col("l_extendedprice") * 100).cast("long").as("cents"),
         round(col("l_quantity")).cast("long").as("w"))
       .groupBy("flag", "cents").agg(sum("w").as("w"))
-    val q = s.readStream.schema(li.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bp = fold(batch)
-        val merged = curState match {
-          case None => bp
-          case Some(p) => s.read.parquet(p).unionByName(bp)
-            .groupBy("flag", "cents").agg(sum("w").as("w"))
-        }
-        val next = s"$stateRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(next)
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, "streamWeightedMedian")
-    graft.operators.Quality.weightedMedianFromFreq(s.read.parquet(curState.get))
-  }
-
-  /** Events written as 4 ts-ordered slices with strictly increasing
-    * file mod-times — the replay layout order-SENSITIVE incremental
-    * operators need (the [[streamSessionizeNative]] discipline,
-    * factored for reuse): half-open quartile cuts put every event in
-    * exactly one slice, and the explicit mtime stamps make the file
-    * source's replay order deterministic. */
-  private def tsSlicedEventsDir(s: SparkSession, d: String): String = {
-    val srcDir = graft.Core.tempDir("graft-tslice-src")
-    val ev0 = graft.Tables(s, d, "events").select("event_id", "ts", "user_id",
-      "event_type", "value", "props")
-    val bounds = ev0
-      .select(graft.Core.epochNs(col("ts").cast("timestamp")).cast("double").as("tsn"))
-      .stat.approxQuantile("tsn", Array(0.25, 0.5, 0.75), 0.01)
-    val cuts = (Double.NegativeInfinity +: bounds.toSeq) :+ Double.PositiveInfinity
-    val stamped = scala.collection.mutable.Set[String]()
-    val mtBase = System.currentTimeMillis() - 3600000L
-    cuts.sliding(2).zipWithIndex.foreach { case (pair, sliceIdx) =>
-      val (lo, hi) = (pair(0), pair(1))
-      val tsn = graft.Core.epochNs(col("ts").cast("timestamp")).cast("double")
-      ev0.filter(tsn >= lit(lo) && tsn < lit(hi))
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      new java.io.File(srcDir).listFiles().foreach { f =>
-        if (!stamped.contains(f.getName) && !f.getName.startsWith("_") &&
-            !f.getName.startsWith(".")) {
-          require(f.setLastModified(mtBase + sliceIdx * 60000L),
-            s"setLastModified failed for $f")
-          stamped += f.getName
-        }
-      }
-    }
-    srcDir
+    graft.operators.Quality.weightedMedianFromFreq(replayFold("streamWeightedMedian",
+        graft.Tables(s, d, "lineitem")
+          .repartitionByRange(4, col("l_orderkey"), col("l_linenumber"))) { (state, batch, _) =>
+      val bp = fold(batch)
+      Some(state.fold(bp)(_.unionByName(bp).groupBy("flag", "cents").agg(sum("w").as("w"))))
+    }.get)
   }
 
   /** The transition-count state fold shared by
@@ -2031,56 +1613,40 @@ object Streams {
     * order-SENSITIVE incremental state: per micro-batch the new
     * transitions are the consecutive pairs of (carried last event ∪
     * batch) per user, so each user's cross-boundary pair is generated
-    * exactly once by the carried row's lead; state = the additive
-    * (from, to) pair counts PLUS each user's latest (ts, event_id,
-    * type) as one struct-max. Requires the ts-ordered slice replay
-    * ([[tsSlicedEventsDir]]) — with unordered batches "the previous
-    * event" is undefined mid-stream. Returns the final maintained
-    * pair table; `tag` names the calling query in the stream log. */
+    * exactly once by the carried row's lead. The state is each user's
+    * latest (ts, event_id, type) as one struct-max; each batch's
+    * (from, to) pair counts go to a batchId-keyed log, summed at read
+    * time (the counts are additive). The replay is range-partitioned
+    * on ts, so batches arrive in ts order with equal timestamps in one
+    * batch — with unordered batches "the previous event" is undefined
+    * mid-stream. Returns the summed pair table; `tag` names the
+    * calling query in the stream log. */
   private def transitionStateFold(s: SparkSession, d: String,
       tag: String): DataFrame = {
-    val srcDir = tsSlicedEventsDir(s, d)
-    val stateRoot = graft.Core.tempDir("graft-trans-state")
-    @volatile var curState: Option[String] = None
-    val q = s.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.expressions.Window
-        val ev = batch.select(
-          graft.Core.epochNs(col("ts")).as("ts"),
-          col("event_id"), col("user_id"), col("event_type"))
-        val carried = curState match {
-          case None => None
-          case Some(p) => Some(s.read.parquet(s"$p/last")
-            .select(col("g.ts").as("ts"), col("g.event_id").as("event_id"),
-              col("user_id"), col("g.event_type").as("event_type")))
-        }
-        val combined = carried.fold(ev)(c => c.unionByName(ev))
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        val newPairs = combined
-          .withColumn("next_type", lead("event_type", 1).over(w))
-          .filter(col("next_type").isNotNull)
-          .groupBy(col("event_type").as("type_from"),
-            col("next_type").as("type_to"))
-          .agg(count(lit(1)).as("n"))
-        val pairs = curState match {
-          case None => newPairs
-          case Some(p) => s.read.parquet(s"$p/pairs").unionByName(newPairs)
-            .groupBy("type_from", "type_to").agg(sum("n").as("n"))
-        }
-        val last = combined.groupBy("user_id")
-          .agg(max(struct(col("ts"), col("event_id"), col("event_type")))
-            .as("g"))
-        val next = s"$stateRoot/v$batchId"
-        pairs.write.mode("overwrite").parquet(s"$next/pairs")
-        last.write.mode("overwrite").parquet(s"$next/last")
-        curState = Some(next)
-      }
-      .start()
-    awaitAndLog(q, tag)
-    s.read.parquet(s"${curState.get}/pairs")
+    import org.apache.spark.sql.expressions.Window
+    val pairLog = graft.Core.tempDir("graft-trans-pairs")
+    replayFold(tag,
+        graft.Tables(s, d, "events").repartitionByRange(4, col("ts"))) { (last, batch, batchId) =>
+      val ev = batch.select(
+        graft.Core.epochNs(col("ts")).as("ts"),
+        col("event_id"), col("user_id"), col("event_type"))
+      val combined = last.fold(ev)(_
+        .select(col("g.ts").as("ts"), col("g.event_id").as("event_id"),
+          col("user_id"), col("g.event_type").as("event_type"))
+        .unionByName(ev))
+      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      combined
+        .withColumn("next_type", lead("event_type", 1).over(w))
+        .filter(col("next_type").isNotNull)
+        .groupBy(col("event_type").as("type_from"),
+          col("next_type").as("type_to"))
+        .agg(count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$pairLog/b=$batchId")
+      Some(combined.groupBy("user_id")
+        .agg(max(struct(col("ts"), col("event_id"), col("event_type"))).as("g")))
+    }
+    s.read.parquet(pairLog)
+      .groupBy("type_from", "type_to").agg(sum("n").as("n"))
   }
 
   /** Live transition matrix: [[transitionStateFold]]'s maintained

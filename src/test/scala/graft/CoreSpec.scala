@@ -62,50 +62,6 @@ class CoreSpec extends SparkSpec {
       s"state should read ONLY the checkpoint leaf, got: ${c12.inputFiles.take(3).mkString(", ")}")
   }
 
-  /** Runs `body` under a fresh job group and returns, for each job
-    * the group started, whether it ran inside a SQL execution. Writes
-    * and actions always do; parquet schema inference on
-    * `read.parquet` runs its footer job outside one, at planning
-    * time. */
-  private def jobsUnder[T](body: => T): (T, Seq[Boolean]) = {
-    val (out, executions) = executionsUnder(body)
-    (out, executions.map(_.isDefined))
-  }
-
-  /** [[jobsUnder]] with the SQL execution id of each job (None for a
-    * job outside one), so a spec can count the actions `body` ran. A
-    * sentinel job in a second group drains the listener bus, which
-    * delivers events in order. */
-  private def executionsUnder[T](body: => T): (T, Seq[Option[String]]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val group = s"corespec-readback-${System.nanoTime}"
-    val sentinel = s"$group-end"
-    val executions = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        props.map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` =>
-            executions.add(props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
-          case `sentinel` => drained.countDown()
-          case _ =>
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "read-back")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      (out, executions.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def dirOf(leaf: DataFrame): String =
     new org.apache.hadoop.fs.Path(leaf.inputFiles.head).getParent.toString
 

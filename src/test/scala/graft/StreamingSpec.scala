@@ -241,6 +241,42 @@ class StreamingSpec extends SparkSpec {
     assert(Streams.lastBatches._1 == 4, s"batches=${Streams.lastBatches}")
   }
 
+  test("replayFold replays partition i as batch i on every run") {
+    import scala.jdk.CollectionConverters._
+    // hash-scattered: the 4 writer tasks finish in any order, so only
+    // the replay source's mtime stamps can fix which rows form a batch
+    val src = spark.range(0, 400).select(col("id")).repartition(4, col("id"))
+    val parts = src.rdd
+      .mapPartitionsWithIndex((i, rows) => rows.map(r => (i.toLong, r.getLong(0))))
+      .collect().groupBy(_._1).map { case (i, rs) => i -> rs.map(_._2).toSet }
+    def replay(): Map[Long, Set[Long]] = {
+      val seen = new java.util.concurrent.ConcurrentHashMap[Long, Set[Long]]
+      val end = Streams.replayFold("spec", src) { (_, batch, batchId) =>
+        seen.put(batchId, batch.as[Long].collect().toSet)
+        None
+      }
+      assert(end.isEmpty, "a step that always keeps None must leave no state")
+      seen.asScala.toMap
+    }
+    val first = replay()
+    assert(parts.size == 4)
+    val misplaced = (parts.keySet ++ first.keySet).filterNot(i => first.get(i) == parts.get(i))
+    assert(misplaced.isEmpty, s"batch i should be partition i; misplaced batches: ${misplaced.toSeq.sorted}")
+    val rerunMatches = replay() == first
+    assert(rerunMatches, "a second replay formed different batches")
+  }
+
+  test("a fold family's build starts no footer-inference job") {
+    // warm the events schema memo: a cold Tables read infers once
+    Streams.streamUpsertLatest(spark, sf).collect()
+    val (df, executions) = executionsUnder(Streams.streamUpsertLatest(spark, sf))
+    // every job is the source write, a batch's own action, or a
+    // state write: all inside SQL actions, none an inference job
+    assert(executions.nonEmpty && executions.forall(_.isDefined),
+      s"upsert build jobs: $executions")
+    assert(df.count() > 0)
+  }
+
   test("streaming heavy hitters equal the batch sketch result on replay") {
     val streamed = Streams.streamHeavyHitters(spark, sf)
       .as[(Int, String, Long)].collect().toSeq
