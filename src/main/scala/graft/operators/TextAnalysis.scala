@@ -2,9 +2,10 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.Core._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Text-analysis operators for an LLM training-data pipeline (north
   * star; SURVEY §2b last row): per-document statistics, quality
@@ -759,58 +760,108 @@ object TextAnalysis {
     * GPT-2-style BPE performs. Output: the [[BpeRounds]] learned
     * merges in order, with their pre-merge pair counts.
     *
-    * The per-doc state is the token ARRAY (r19 — previously a
-    * separator-joined string the pair scan re-split every round):
-    * pair extraction is a slice-zip directly over the state, and the
-    * merge step is a codegen'd map-side fold collecting the
-    * non-overlapping merge positions plus one rebuild transform — no
-    * per-row loops outside codegen. The winning pair is
-    * collected to the driver (ONE row per round, the loop's control
-    * decision — same class as the connected-components convergence
-    * probe) and inlined as a literal rewrite pattern; re-joining it
-    * as a derived 1-row frame would reference the corpus plan twice
-    * per round and double the logical tree every round (see
-    * [[bpeLoopN]]).
-    *
-    * Scale: per round, the corpus is scanned map-side (explode of
-    * adjacent pairs feeds a partially-aggregated count — the shuffle
-    * carries |vocab²∩corpus| pair tallies, not tokens) and the argmax
-    * is TakeOrdered(1). The corpus itself never shuffles in any
-    * round. Production BPE trainers run on a sampled shard for
-    * exactly this reason; the loop here is the shard trainer. */
+    * Scale: the tokenized corpus is written once as a parquet leaf
+    * ([[bpeCorpus]]), and a `Dataset.observe` on that write counts its
+    * tokens. At or below [[LocalBpeTokens]] tokens every round runs in
+    * ONE task over that leaf ([[localRounds]]): the distributed loop
+    * would only pay per-round jobs and codegen there (on the perfbench
+    * `driver_loops` corpus, 18 → 3 jobs a lap). Every registered corpus
+    * fits under the bound; sf0.1 has about 270k tokens. The learned
+    * merges reach the driver as at most one row per round, the loop's
+    * control decision, and plan as a LocalTableScan; corpus rows never
+    * do. Above the bound the distributed loop ([[bpeRounds]]) runs:
+    * per round the corpus is scanned map-side (explode of adjacent
+    * pairs feeds a partially-aggregated count — the shuffle carries
+    * |vocab²∩corpus| pair tallies, not tokens) and the argmax is
+    * TakeOrdered(1). The corpus itself never shuffles in any round.
+    * Production BPE trainers run on a sampled shard for exactly this
+    * reason; the loop here is the shard trainer. */
   def bpeTrain(s: SparkSession, d: String): DataFrame =
     bpeTrainN(s, d, BpeRounds)
 
   /** [[bpeTrain]] at an arbitrary round count. The registered
-    * `text_bpe_train12` variant runs [[DeepBpeRounds]] rounds — past
-    * the [[graft.Core.CkptEvery]] = 8 threshold, so its execution
-    * provably crosses one parquet-leaf checkpoint (rounds 9–12 scan
-    * the round-8 leaf, not the live rewrite chain): the deep-loop
-    * plan-growth machinery CoreSpec pins structurally also carries a
-    * green CORRECTNESS row. */
-  private[graft] def bpeTrainN(s: SparkSession, d: String, n: Int): DataFrame =
-    bpeLoopN(s, d, n)._2
-      .select(col("round"),
-        element_at(split(col("pair"), BpeSep), 1).as("lhs"),
-        element_at(split(col("pair"), BpeSep), 2).as("rhs"),
-        replace(col("pair"), lit(BpeSep), lit("")).as("merged"),
-        col("cnt"))
-      .orderBy("round")
+    * `text_bpe_train12` variant runs [[DeepBpeRounds]] rounds, past the
+    * distributed loop's [[graft.Core.CkptEvery]] = 8 parquet-leaf
+    * checkpoint. Its corpus is under [[LocalBpeTokens]], so it finishes
+    * locally and never crosses that checkpoint; the crossing keeps its
+    * correctness check through the BPE equality spec, which compares
+    * [[iterativeBpe]] with [[localBpe]] at 12 and 20 rounds (CoreSpec
+    * still pins the checkpointed plan's shape). */
+  private[graft] def bpeTrainN(s: SparkSession, d: String, n: Int): DataFrame = {
+    val (corpus, nTokens) = bpeCorpus(s, d)
+    bpeMergeTable(
+      if (nTokens > LocalBpeTokens) bpeRounds(corpus, n)._2 else localMerges(corpus, n))
+  }
+
+  /** The registered train table of a merge table (round, pair, cnt).
+    * Both paths build the merges on the driver in round order, so the
+    * table is a local relation already in order: a sort over it would
+    * plan a range exchange, three jobs for at most one row per round. */
+  private[graft] def bpeMergeTable(merges: DataFrame): DataFrame =
+    merges.select(col("round"),
+      element_at(split(col("pair"), BpeSep), 1).as("lhs"),
+      element_at(split(col("pair"), BpeSep), 2).as("rhs"),
+      replace(col("pair"), lit(BpeSep), lit("")).as("merged"),
+      col("cnt"))
 
   /** BPE APPLY — tokenize the corpus with the merges [[bpeTrain]]
     * learned, reporting per-doc compression accounting (tokens
     * before/after, tokens saved). The final rewrite state of the
     * training loop IS the applied tokenization, so train and apply
     * share one plan prefix; a production pipeline runs apply as the
-    * same broadcast-rewrite chain against a FROZEN merge table. */
-  def bpeApply(s: SparkSession, d: String): DataFrame =
-    bpeLoop(s, d)._1
+    * same broadcast-rewrite chain against a FROZEN merge table. On
+    * the one-task path the rewritten rows come out of the task that
+    * runs the rounds, inside this query's own action. */
+  def bpeApply(s: SparkSession, d: String): DataFrame = {
+    val (corpus, nTokens) = bpeCorpus(s, d)
+    bpeSavings(
+      if (nTokens > LocalBpeTokens) bpeRounds(corpus, BpeRounds)._1
+      else localState(corpus, BpeRounds))
+  }
+
+  /** The registered apply table of a final rewrite state. */
+  private[graft] def bpeSavings(state: DataFrame): DataFrame =
+    state
       .select(col("doc_id"), col("n0").as("n_tokens_before"),
         size(col("a")).as("n_tokens_after"),
         (col("n0") - size(col("a"))).as("n_saved"))
       .orderBy("doc_id")
 
-  /** The shared merge loop: (final per-doc state, merge table).
+  /** Corpus token count at or below which BPE runs every round in one
+    * task ([[localRounds]]). 10⁶ int token ids are about 4 MB, which
+    * one task holds comfortably. A constant, not a knob: above it the
+    * distributed loop runs as before. */
+  private val LocalBpeTokens = 1000000L
+
+  /** The tokenized corpus (doc_id, n0, a) of the documents with at
+    * least one token, written once as a parquet leaf, and its token
+    * count (the sum of n0), counted by an observation on that write. */
+  private def bpeCorpus(s: SparkSession, d: String): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation("bpe-tokens")
+    val corpus = parquetLeaf(docs(s, d)
+        .select(col("doc_id"), tokens(col("text")).as("t"))
+        .filter(size(col("t")) > 0)
+        .select(col("doc_id"), size(col("t")).as("n0"), col("t").as("a"))
+        .observe(obs, coalesce(sum(col("n0")), lit(0L)).as("n")),
+      tempDir("graft-bpe-corpus"))
+    (corpus, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** (final per-doc state, merge table) of the distributed loop
+    * whatever the corpus size: CoreSpec and PlanSpec pin its plans,
+    * and the equality spec compares it with [[localBpe]]. */
+  private[graft] def iterativeBpe(s: SparkSession, d: String, n: Int): (DataFrame, DataFrame) =
+    bpeRounds(bpeCorpus(s, d)._1, n)
+
+  /** (final per-doc state, merge table) of the one-task path whatever
+    * the corpus size; each frame runs the rounds once. */
+  private[graft] def localBpe(s: SparkSession, d: String, n: Int): (DataFrame, DataFrame) = {
+    val corpus = bpeCorpus(s, d)._1
+    (localState(corpus, n), localMerges(corpus, n))
+  }
+
+  /** The distributed merge loop over the corpus leaf: (final per-doc
+    * state, merge table).
     *
     * The per-doc state is the token array, so a merge can only fuse
     * two complete adjacent tokens (the array is boundary-anchored by
@@ -822,25 +873,16 @@ object TextAnalysis {
     * semantics through its own separator-wrapped string state
     * (`␟lhs␟␟rhs␟ → ␟merged␟` literal replace), which is provably the
     * same merge: a just-merged token can never seed another match in
-    * the same scan on either side (merged = lhs+rhs ≠ lhs). */
-  private def bpeLoop(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    bpeLoopN(s, d, BpeRounds)
-
-  /** Round count exposed for CoreSpec's bounded-plan-depth pin (a
-    * 20-round train crossing the [[graft.Core.CkptEvery]] threshold
-    * twice); registered queries always run [[BpeRounds]]. */
-  private[graft] def bpeLoopN(
-      s: SparkSession, d: String, bpeRounds: Int): (DataFrame, DataFrame) = {
+    * the same scan on either side (merged = lhs+rhs ≠ lhs). The
+    * rebuild maps over `a` itself, so every state, rewritten or
+    * checkpointed, has the corpus leaf's schema. */
+  private def bpeRounds(corpus: DataFrame, n: Int): (DataFrame, DataFrame) = {
     def pairs(t: Column): Column =
       zip_with(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
         (a, b) => concat(a, lit(BpeSep), b))
-    val base = cached(docs(s, d)
-      .select(col("doc_id"), tokens(col("text")).as("t"))
-      .filter(size(col("t")) > 0)
-      .select(col("doc_id"), size(col("t")).as("n0"), col("t").as("a")))
-    var cur = base
+    var cur = corpus
     val winners = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
-    for (r <- 1 to bpeRounds) {
+    for (r <- 1 to n) {
       // The round winner is ONE row: the argmax rides
       // TakeOrderedAndProject (per-partition top-1 merge) and lands
       // on the driver as the loop's control decision — same class as
@@ -884,15 +926,16 @@ object TextAnalysis {
               .otherwise(st),
             st => st.getField("ms")))
           .otherwise(array_repeat(lit(1), 0))
+        // ms holds 1-based positions; transform's index is 0-based
         cur = cached(cur
           .withColumn("ms", ms)
           .select(col("doc_id"), col("n0"),
-            flatten(transform(sequence(lit(1), size(col("a"))), j =>
-              when(array_contains(col("ms"), j),
+            flatten(transform(col("a"), (t, i) =>
+              when(array_contains(col("ms"), i + 1),
                 array(lit(pair.replace(BpeSep, ""))))
-                .when(array_contains(col("ms"), j - 1),
+                .when(array_contains(col("ms"), i),
                   array_repeat(lit(""), 0))
-                .otherwise(array(element_at(col("a"), j))))).as("a")))
+                .otherwise(array(t)))).as("a")))
       }
       // parquet-leaf cut every CkptEvery rounds: a long vocab train
       // (thousands of merges) must not accumulate one rewrite
@@ -902,11 +945,95 @@ object TextAnalysis {
       if (r % graft.Core.CkptEvery == 0)
         cur = graft.Core.ckptRound(cur, "graft-bpe-ckpt")
     }
+    val s = corpus.sparkSession
     import s.implicits._
     (cur, winners.toSeq.toDF("round", "pair", "cnt"))
   }
 
-  /** The oracle replay of [[bpeLoop]]: d0..dN rewrite states (doc_id
+  /** The merge table of [[localRounds]], collected: at most `n` rows,
+    * with the distributed loop's schema. */
+  private def localMerges(corpus: DataFrame, n: Int): DataFrame = {
+    val s = corpus.sparkSession
+    import s.implicits._
+    corpus.coalesce(1).mapPartitions(rows => localRounds(rows, n)._1.iterator)
+      .collect().toSeq.toDF("round", "pair", "cnt")
+  }
+
+  /** The final per-doc rows of [[localRounds]], with the corpus leaf's
+    * schema. One partition, so a consumer's sort needs no exchange. */
+  private def localState(corpus: DataFrame, n: Int): DataFrame =
+    corpus.coalesce(1)
+      .mapPartitions(rows => localRounds(rows, n)._2)(Encoders.row(corpus.schema))
+
+  /** [[bpeRounds]] in one task over corpus rows (doc_id, n0, a): (the
+    * merges, the rows with `a` rewritten). Tokens are interned to int
+    * ids, so a pair is one long key. Each round counts the adjacent
+    * pairs with overlaps (`a a a` holds `a a` twice, as the
+    * distributed explode counts it), takes the highest count, ties to
+    * the smaller `lhs<sep>rhs` in UTF-8 byte order (Spark's string
+    * order), and merges left to right without overlap ([[mergePair]]).
+    * A round with no pair left ends the loop, so the merges can be
+    * fewer than `n`. */
+  private def localRounds(
+      rows: Iterator[Row], n: Int): (Seq[(Int, String, Long)], Iterator[Row]) = {
+    val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    val vocab = scala.collection.mutable.ArrayBuffer.empty[String]
+    def intern(t: String): Int = ids.getOrElseUpdate(t, { vocab += t; vocab.length - 1 })
+    def pairOf(k: Long): String = vocab((k >>> 32).toInt) + BpeSep + vocab(k.toInt)
+    val in = rows.toArray
+    val docs = in.map(_.getSeq[String](2).iterator.map(intern).toArray)
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
+    var r = 1
+    var pairsLeft = true
+    while (r <= n && pairsLeft) {
+      val counts = new scala.collection.mutable.LongMap[Long]
+      docs.foreach { a =>
+        var i = 0
+        while (i < a.length - 1) {
+          val k = (a(i).toLong << 32) | (a(i + 1) & 0xffffffffL)
+          counts(k) = counts.getOrElse(k, 0L) + 1
+          i += 1
+        }
+      }
+      pairsLeft = counts.nonEmpty
+      if (pairsLeft) {
+        var best = 0L
+        var bestN = 0L
+        var bestBytes: Array[Byte] = null // computed only on a tie
+        counts.foreachEntry { (k, c) =>
+          if (c > bestN) { best = k; bestN = c; bestBytes = null }
+          else if (c == bestN) {
+            if (bestBytes == null) bestBytes = pairOf(best).getBytes(UTF_8)
+            val kb = pairOf(k).getBytes(UTF_8)
+            if (java.util.Arrays.compareUnsigned(kb, bestBytes) < 0) { best = k; bestBytes = kb }
+          }
+        }
+        merges += ((r, pairOf(best), bestN))
+        val (lhs, rhs) = ((best >>> 32).toInt, best.toInt)
+        val merged = intern(vocab(lhs) + vocab(rhs))
+        docs.indices.foreach(i => docs(i) = mergePair(docs(i), lhs, rhs, merged))
+      }
+      r += 1
+    }
+    (merges.toSeq, in.iterator.zip(docs.iterator).map { case (row, a) =>
+      Row(row.get(0), row.get(1), a.toSeq.map(vocab)) })
+  }
+
+  /** `a` with each `lhs rhs` pair, scanned left to right without
+    * overlap, replaced by `merged`: `a a a → aa a`. */
+  private def mergePair(a: Array[Int], lhs: Int, rhs: Int, merged: Int): Array[Int] = {
+    val out = new Array[Int](a.length)
+    var i = 0
+    var j = 0
+    while (i < a.length) {
+      if (i + 1 < a.length && a(i) == lhs && a(i + 1) == rhs) { out(j) = merged; i += 2 }
+      else { out(j) = a(i); i += 1 }
+      j += 1
+    }
+    if (j == a.length) a else java.util.Arrays.copyOf(out, j)
+  }
+
+  /** The oracle replay of [[bpeRounds]]: d0..dN rewrite states (doc_id
     * and pre-merge count carried through) and m1..mN round winners —
     * shared by the train and apply oracles.
     *
@@ -919,7 +1046,7 @@ object TextAnalysis {
     * peel oracle. */
   private def oBpeChain(bpeRounds: Int): String = {
     // ␟tok␟␟tok␟ wrapped state + boundary-anchored literal patterns —
-    // byte-for-byte the [[bpeLoop]] spellings
+    // byte-for-byte the [[bpeRounds]] spellings
     val retok = "string_split(trim(s, chr(1)), chr(1) || chr(1))"
     val rounds = (1 to bpeRounds).map { r =>
       s"""p$r AS MATERIALIZED (

@@ -179,6 +179,27 @@ object Streams {
     state
   }
 
+  /** A batchId-keyed side log of a replay fold: each batch writes its
+    * slice to `<dir>/<part>=<batchId>` (a retry overwrites its own
+    * slice), and a read lists every slice written so far with the
+    * slices' schema plus the partition column, typed int as partition
+    * inference types small batch ids. A schema-less read of the log
+    * would plan a footer-inference job on every call. */
+  private final class SideLog(prefix: String, part: String = "b") {
+    private val dir = graft.Core.tempDir(prefix)
+    @volatile private var schema: Option[StructType] = None
+
+    /** Writes `df` as batch `batchId`'s slice; returns the slice's leaf. */
+    def write(df: DataFrame, batchId: Long): DataFrame = {
+      val leaf = graft.Core.parquetLeaf(df, s"$dir/$part=$batchId")
+      schema = Some(df.schema)
+      leaf
+    }
+
+    def read(s: SparkSession): DataFrame =
+      s.read.schema(schema.get.add(part, IntegerType)).parquet(dir)
+  }
+
   /** Streaming word count — the reference pipeline lifted onto an
     * unbounded source; matches the batch `wordcount` oracle. */
   def streamWordCount(s: SparkSession, d: String): DataFrame = {
@@ -860,19 +881,19 @@ object Streams {
     * (m1, m2) minima are kept unhashed so the DuckDB oracle replays
     * the identical band keys from the seed constants. */
   def streamDedupNeardup(s: SparkSession, d: String): DataFrame = {
-    val bandLog = graft.Core.tempDir("graft-nd-bands")
+    val bandLog = new SideLog("graft-nd-bands")
     val mins = replayFold("streamDedupNeardup",
         graft.Tables(s, d, "documents").repartitionByRange(4, col("doc_id"))) { (state, batch, batchId) =>
       val bands = graft.operators.Dedup.minhashBandRows(batch)
       // the log rows are later summed per source, so a retry must
       // replace its own slice, not double it
-      bands.write.mode("overwrite").parquet(s"$bandLog/b=$batchId")
+      bandLog.write(bands, batchId)
       val m = bands
         .select(col("band_idx"), col("m1"), col("m2"), col("doc_id").as("min_doc"))
       Some(state.fold(m)(_.unionByName(m))
         .groupBy("band_idx", "m1", "m2").agg(min("min_doc").as("min_doc")))
     }.get
-    val adm = s.read.parquet(bandLog)
+    val adm = bandLog.read(s)
       .join(mins, Seq("band_idx", "m1", "m2"))
       .groupBy("doc_id")
       .agg(min(when(col("min_doc") === col("doc_id"), 1L).otherwise(0L)).as("ok"))
@@ -969,17 +990,17 @@ object Streams {
     * graph. */
   def streamDupClusters(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Dedup
-    val bandLog = graft.Core.tempDir("graft-cl-bands")
-    val setsLog = graft.Core.tempDir("graft-cl-sets")
+    val bandLog = new SideLog("graft-cl-bands")
+    val setsLog = new SideLog("graft-cl-sets")
     val labels = replayFold("streamDupClusters",
         graft.Tables(s, d, "documents").repartitionByRange(4, col("doc_id"))) { (state, batch, batchId) =>
       val sets = Dedup.wordSetsOf(batch)
       val bands = Dedup.minhashBandRows(batch)
-      sets.write.mode("overwrite").parquet(s"$setsLog/b=$batchId")
-      bands.write.mode("overwrite").parquet(s"$bandLog/b=$batchId")
+      setsLog.write(sets, batchId)
+      bandLog.write(bands, batchId)
       // candidates: batch bands vs ALL bands seen so far (incl. own
       // batch — the log already contains this batch's slice)
-      val allBands = s.read.parquet(bandLog)
+      val allBands = bandLog.read(s)
         .select(col("band_idx"), col("m1"), col("m2"), col("doc_id").as("doc_b"))
       val cand = bands
         .select(col("band_idx"), col("m1"), col("m2"), col("doc_id").as("doc_a"))
@@ -988,7 +1009,7 @@ object Streams {
         .select(least(col("doc_a"), col("doc_b")).as("a"),
           greatest(col("doc_a"), col("doc_b")).as("b"))
         .distinct()
-      val allSets = s.read.parquet(setsLog)
+      val allSets = setsLog.read(s)
       val newPairs = cand
         .join(allSets.select(col("doc_id").as("a"), col("sh").as("sh_a")), "a")
         .join(allSets.select(col("doc_id").as("b"), col("sh").as("sh_b")), "b")
@@ -1030,29 +1051,37 @@ object Streams {
     import graft.operators.Dedup
     def customers = graft.Tables(s, d, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_nationkey"))
-    val blockLog = graft.Core.tempDir("graft-er-blocks")
+    val blockLog = new SideLog("graft-er-blocks")
     val labels = replayFold("streamErGolden",
         customers.repartition(4, col("c_custkey"))) { (state, batch, batchId) =>
-      val rows = Dedup.erBlockRows(s, d, batch)
-      rows.write.mode("overwrite").parquet(s"$blockLog/b=$batchId")
-      // candidates: batch rows vs ALL rows seen so far (incl. own
-      // batch — the log already contains this batch's slice), so
-      // every pair fires when its LATER member arrives
-      val all = s.read.parquet(blockLog)
-        .select(col("c_custkey").as("b"), col("c_nationkey").as("nb"),
-          col("core").as("core_b"), col("h"))
-      val newEdges = rows
-        .select(col("c_custkey").as("a"), col("c_nationkey").as("na"),
-          col("core").as("core_a"), col("h"))
-        .join(all, Seq("h"))
-        .filter(col("a") =!= col("b") && col("na") === col("nb"))
-        .filter(levenshtein(col("core_a"), col("core_b"), 1) =!= -1)
-        .select(least(col("a"), col("b")).as("a"),
-          greatest(col("a"), col("b")).as("b"))
-        .distinct()
-      foldEdgesIntoLabels(state, newEdges)
+      foldEdgesIntoLabels(state, erNewEdges(s, d, blockLog, batch, batchId))
     }.get
     Dedup.goldenSurvivorship(customers, labels)
+  }
+
+  /** One ER batch's new match edges, each pair once as (a < b): the
+    * batch's deletion-blocking rows ([[graft.operators.Dedup
+    * .erBlockRows]]) are written as its `blocks` slice, then joined on
+    * the block hash with ALL slices so far (its own included, so every
+    * pair fires when its LATER member arrives) and verified by same
+    * nation and levenshtein ≤ 1. Shared by [[streamErGolden]] and
+    * [[streamErConfidence]]. */
+  private def erNewEdges(s: SparkSession, d: String, blocks: SideLog,
+      batch: DataFrame, batchId: Long): DataFrame = {
+    val rows = graft.operators.Dedup.erBlockRows(s, d, batch)
+    blocks.write(rows, batchId)
+    val all = blocks.read(s)
+      .select(col("c_custkey").as("b"), col("c_nationkey").as("nb"),
+        col("core").as("core_b"), col("h"))
+    rows
+      .select(col("c_custkey").as("a"), col("c_nationkey").as("na"),
+        col("core").as("core_a"), col("h"))
+      .join(all, Seq("h"))
+      .filter(col("a") =!= col("b") && col("na") === col("nb"))
+      .filter(levenshtein(col("core_a"), col("core_b"), 1) =!= -1)
+      .select(least(col("a"), col("b")).as("a"),
+        greatest(col("a"), col("b")).as("b"))
+      .distinct()
   }
 
   /** Streaming LM-STATISTICS maintenance — the streaming twin of the
@@ -1106,24 +1135,24 @@ object Streams {
     * like the batch query (bounded by block density). */
   def streamErFellegi(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Dedup
-    val recsLog = graft.Core.tempDir("graft-fs-recs")
-    val pairLog = graft.Core.tempDir("graft-fs-pairs")
+    val recsLog = new SideLog("graft-fs-recs")
+    val pairLog = new SideLog("graft-fs-pairs")
     val mu = replayFold("streamErFellegi",
         graft.Tables(s, d, "customer").repartition(4, col("c_custkey"))) { (state, batch, batchId) =>
-      batch.write.mode("overwrite").parquet(s"$recsLog/b=$batchId")
+      recsLog.write(batch, batchId)
       val inPairs = Dedup.fsPairFeatures(batch, batch, ordered = true)
       val newPairs =
         if (batchId == 0) inPairs
         else {
-          val older = s.read.parquet(recsLog)
+          val older = recsLog.read(s)
             .filter(col("b") < batchId).drop("b")
           Dedup.fsPairFeatures(batch, older, ordered = false)
             .unionByName(inPairs)
         }
-      val muBatch = Dedup.fsMu(graft.Core.parquetLeaf(newPairs, s"$pairLog/b=$batchId"))
+      val muBatch = Dedup.fsMu(pairLog.write(newPairs, batchId))
       Some(state.fold(muBatch)(Dedup.fsMuMerge(_, muBatch)))
     }.get
-    Dedup.fsTail(s.read.parquet(pairLog).drop("b"), mu)
+    Dedup.fsTail(pairLog.read(s).drop("b"), mu)
   }
 
   /** Streaming ER match-EVIDENCE maintenance — the third member of
@@ -1156,32 +1185,20 @@ object Streams {
     import graft.operators.Dedup
     def customers = graft.Tables(s, d, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_nationkey"))
-    val blockLog = graft.Core.tempDir("graft-erc-blocks")
-    val edgeLog = graft.Core.tempDir("graft-erc-edges")
+    val blockLog = new SideLog("graft-erc-blocks")
+    val edgeLog = new SideLog("graft-erc-edges", "bat")
     // the edge log is the whole state, so every step keeps None
     replayFold("streamErConfidence",
         customers.repartition(4, col("c_custkey"))) { (_, batch, batchId) =>
-      val rows = Dedup.erBlockRows(s, d, batch)
-      rows.write.mode("overwrite").parquet(s"$blockLog/b=$batchId")
-      val all = s.read.parquet(blockLog)
-        .select(col("c_custkey").as("b"), col("c_nationkey").as("nb"),
-          col("core").as("core_b"), col("h"))
-      val newEdges = rows
-        .select(col("c_custkey").as("a"), col("c_nationkey").as("na"),
-          col("core").as("core_a"), col("h"))
-        .join(all, Seq("h"))
-        .filter(col("a") =!= col("b") && col("na") === col("nb"))
-        .filter(levenshtein(col("core_a"), col("core_b"), 1) =!= -1)
-        .select(least(col("a"), col("b")).as("a"),
-          greatest(col("a"), col("b")).as("b"))
-        .distinct()
+      val newEdges = erNewEdges(s, d, blockLog, batch, batchId)
       // score at match time against the record store (the stream's
       // own source table) and persist the evidence row
-      Dedup.erEdgeSims(customers.select(col("c_custkey"), col("c_name")), newEdges)
-        .write.mode("overwrite").parquet(s"$edgeLog/bat=$batchId")
+      edgeLog.write(
+        Dedup.erEdgeSims(customers.select(col("c_custkey"), col("c_name")), newEdges),
+        batchId)
       None
     }
-    Dedup.erConfidenceReport(s.read.parquet(edgeLog).drop("bat"))
+    Dedup.erConfidenceReport(edgeLog.read(s).drop("bat"))
   }
 
   /** Streaming verbatim-SPAN ingest dedup — the ExactSubstr member
@@ -1197,16 +1214,16 @@ object Streams {
     * grams reached corpus count ≥ 2), so any arrival order converges
     * to the batch recomputation the oracle runs. */
   def streamSpanIngest(s: SparkSession, d: String): DataFrame = {
-    val gramLog = graft.Core.tempDir("graft-span-log")
+    val gramLog = new SideLog("graft-span-log")
     val counts = replayFold("streamSpanIngest",
         graft.Tables(s, d, "documents").repartitionByRange(4, col("doc_id"))) { (state, batch, batchId) =>
       val g = graft.operators.SpanDedup.gramRows(batch).select("doc_id", "g")
-      g.write.mode("overwrite").parquet(s"$gramLog/b=$batchId")
+      gramLog.write(g, batchId)
       val c = g.groupBy("g").agg(count(lit(1)).as("n"))
       Some(state.fold(c)(_.unionByName(c).groupBy("g").agg(sum(col("n")).as("n"))))
     }.get
     val rep = counts.filter(col("n") >= 2).select("g")
-    val dirty = s.read.parquet(gramLog).join(rep, "g")
+    val dirty = gramLog.read(s).join(rep, "g")
       .select("doc_id").distinct().withColumn("dirty", lit(1L))
     graft.Tables(s, d, "documents").join(dirty, Seq("doc_id"), "left")
       .groupBy("source")
@@ -1227,15 +1244,15 @@ object Streams {
     * arrival order converges to the batch recomputation the oracle
     * runs. */
   def streamPhashIngest(s: SparkSession, d: String): DataFrame = {
-    val hashLog = graft.Core.tempDir("graft-ph-log")
+    val hashLog = new SideLog("graft-ph-log")
     val mins = replayFold("streamPhashIngest",
         graft.Tables(s, d, "documents").repartitionByRange(4, col("doc_id"))) { (state, batch, batchId) =>
       val hashes = graft.operators.Multimodal.phashOf(batch)
-      hashes.write.mode("overwrite").parquet(s"$hashLog/b=$batchId")
+      hashLog.write(hashes, batchId)
       val m = hashes.select(col("dhash"), col("doc_id").as("min_doc"))
       Some(state.fold(m)(_.unionByName(m)).groupBy("dhash").agg(min("min_doc").as("min_doc")))
     }.get
-    val adm = s.read.parquet(hashLog)
+    val adm = hashLog.read(s)
       .join(mins, "dhash")
       .select(col("doc_id"),
         (col("min_doc") === col("doc_id")).cast("long").as("ok"))
@@ -1624,7 +1641,7 @@ object Streams {
   private def transitionStateFold(s: SparkSession, d: String,
       tag: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pairLog = graft.Core.tempDir("graft-trans-pairs")
+    val pairLog = new SideLog("graft-trans-pairs")
     replayFold(tag,
         graft.Tables(s, d, "events").repartitionByRange(4, col("ts"))) { (last, batch, batchId) =>
       val ev = batch.select(
@@ -1635,17 +1652,16 @@ object Streams {
           col("user_id"), col("g.event_type").as("event_type"))
         .unionByName(ev))
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      combined
+      pairLog.write(combined
         .withColumn("next_type", lead("event_type", 1).over(w))
         .filter(col("next_type").isNotNull)
         .groupBy(col("event_type").as("type_from"),
           col("next_type").as("type_to"))
-        .agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$pairLog/b=$batchId")
+        .agg(count(lit(1)).as("n")), batchId)
       Some(combined.groupBy("user_id")
         .agg(max(struct(col("ts"), col("event_id"), col("event_type"))).as("g")))
     }
-    s.read.parquet(pairLog)
+    pairLog.read(s)
       .groupBy("type_from", "type_to").agg(sum("n").as("n"))
   }
 

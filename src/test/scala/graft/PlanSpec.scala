@@ -1744,15 +1744,17 @@ class PlanSpec extends SparkSpec {
     // control), so the merge table plans as a LocalTableScan — no
     // join of any kind ever touches the corpus. (The former 1-row
     // BroadcastNestedLoopJoin spelling referenced the corpus plan
-    // twice per round — exponential logical tree; see bpeLoopN.)
-    val t = executed(TextAnalysis.bpeTrain(spark, sf))
+    // twice per round — exponential logical tree; see bpeRounds.)
+    // Both pins read the distributed loop, which a small corpus skips.
+    val (state, merges) = TextAnalysis.iterativeBpe(spark, sf, 5)
+    val t = executed(TextAnalysis.bpeMergeTable(merges))
     assert(t.contains("LocalTableScan"), t.take(900))
     assert(!t.contains("Join") && !t.contains("CartesianProduct"), t.take(900))
     // the apply path (the corpus chain itself): literal-replace
-    // projections over the cached scan — join-free, and the ONLY
+    // projections over the corpus leaf — join-free, and the ONLY
     // exchange is the final presentation orderBy, so the corpus
     // never shuffles through any merge round
-    val a = executed(TextAnalysis.bpeApply(spark, sf))
+    val a = executed(TextAnalysis.bpeSavings(state))
     assert(!a.contains("Join") && !a.contains("CartesianProduct"), a.take(900))
     assert("Exchange".r.findAllIn(a).size <= 1, a.take(900))
     Core.releaseCaches()

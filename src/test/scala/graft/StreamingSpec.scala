@@ -277,6 +277,22 @@ class StreamingSpec extends SparkSpec {
     assert(df.count() > 0)
   }
 
+  test("side-log families read their logs back without a footer-inference job") {
+    // stream_dedup_clusters reads its band and shingle logs every
+    // batch, stream_er_golden its block log
+    Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "stream_dedup_clusters" -> Streams.streamDupClusters,
+      "stream_er_golden" -> Streams.streamErGolden).foreach { case (name, build) =>
+      build(spark, sf).collect()
+      val (df, executions) = executionsUnder(build(spark, sf))
+      info(s"$name build: ${executions.size} jobs, ${executions.count(_.isEmpty)} outside a SQL action")
+      assert(executions.nonEmpty && executions.forall(_.isDefined), s"$name build jobs: $executions")
+      assert(df.count() > 0)
+      Core.releaseCaches()
+    }
+  }
+
   test("streaming heavy hitters equal the batch sketch result on replay") {
     val streamed = Streams.streamHeavyHitters(spark, sf)
       .as[(Int, String, Long)].collect().toSeq
