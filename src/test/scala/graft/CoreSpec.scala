@@ -202,6 +202,49 @@ class CoreSpec extends SparkSpec {
     }
   }
 
+  test("a second pass over the single_action queries recompiles no generated class") {
+    // Spark keeps compiled generated classes in one JVM-wide cache of
+    // `spark.sql.codegen.cache.maxEntries` entries, keyed by (class
+    // loader, source) and sized once, on the first compile. build.sbt
+    // raises it from 100, which one pass over these four queries
+    // overflows: each pass then evicts classes the next one needs, and
+    // every evicted class compiles again and loses its JIT'd code.
+    // The second pass may still compile a few sources the first did
+    // not: q2's adaptive plan numbers its codegen stages in the order
+    // its query stages are planned, so the same code can come back
+    // under another class name. Every such compile is a key the cache
+    // did not hold, so the pin counts compiles against new keys.
+    // Streaming queries stay out: each run clones the session, and the
+    // clone's tasks load their classes through a fresh executor class
+    // loader, so they compile again under any cap.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.sparkproject.guava.cache.Cache
+    import scala.jdk.CollectionConverters._
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "8192")
+    // CodeGenerator.cache is private: a NonFateSharingLoadingCache over a Guava cache
+    val field = CodeGenerator.getClass.getDeclaredField("cache")
+    field.setAccessible(true)
+    val wrapper = field.get(CodeGenerator)
+    val cache = wrapper.getClass.getMethod("loadingCache").invoke(wrapper).asInstanceOf[Cache[AnyRef, AnyRef]]
+    def state = (cache.asMap.keySet.asScala.toSet, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    val names = Seq("wordcount", "dedup_minhash_lsh", "q2_shape_min_cost", "q9_shape_profit")
+    def pass(): Unit = names.foreach { n =>
+      SparkEntry.queries(n)(spark, sf).write.format("noop").mode("overwrite").save()
+      Core.releaseCaches()
+    }
+    val (start, _) = state
+    pass()
+    val (first, before) = state
+    pass()
+    val (second, after) = state
+    // the cache may already hold other suites' classes, which LRU may evict
+    val compiled = first -- start
+    val (evicted, added) = ((compiled -- second).size, (second -- first).size)
+    assert(evicted == 0, s"the second pass evicted $evicted of the ${compiled.size} classes the first compiled")
+    assert(after - before == added, s"the second pass compiled ${after - before} classes, $added of them new")
+  }
+
   test("every .collect() in src/main is a 1-row limit(1) loop-control read") {
     // The SCALE.md invariant, pinned grep-ably: no DATA-bearing
     // collect may land in the engine. The four legal sites today are
