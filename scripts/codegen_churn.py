@@ -7,17 +7,28 @@ Reads the file written through scripts/log4j2-codegen.properties: each
 `@@codegen` record at DEBUG is one Janino compile (CodeGenerator logs
 the source only on a cache miss), and the INFO record "Code generated
 in N ms" that follows it on the same thread gives its compile time.
-Sources are told apart by the hash of their logged text.
+Sources are told apart by the hash of their logged text with the
+codegen stage id taken out (the `codegenStageId=N` comment and the
+`GeneratedIteratorForCodegenStageN` class-name suffix). Spark's cache
+compares a source's body without its comments, and
+`spark.sql.codegen.useIdInClassName=false` drops the id from the class
+name, so two logged sources that differ only in the stage id are one
+cache key there; with the id in the class name they are two keys for
+the same code, and compiling the second is as wasted as a cache miss.
 
 Prints the total compiles, distinct sources and compile time; the same
 per thread kind (the thread name cut at " for " with its digits
-replaced by N, so every task thread is one kind); and the sources
-compiled more than once, most compiled first. In a long-lived session
-a source compiled again was evicted from Spark's codegen cache
-(`spark.sql.codegen.cache.maxEntries`), or compiled under another
-class loader: the cache key is (class loader, source), and a cloned
-session, such as a streaming query's, loads its tasks' classes through
-its own loader. Exits 1 when some source was compiled more than once.
+replaced by N, so every task thread is one kind), with how many of the
+kind's sources were compiled more than once and how many of those were
+also compiled under another kind; and the sources compiled more than
+once, most compiled first. In a long-lived session a source compiled
+again was evicted from Spark's codegen cache
+(`spark.sql.codegen.cache.maxEntries`), came back under another stage
+id, or was compiled under another class loader: the cache key is
+(class loader, source), and with `spark.sql.artifact.isolation.enabled`
+on, every session, a streaming query's clone included, loads its tasks'
+classes through its own loader. Exits 1 when some source was compiled
+more than once.
 Stdlib only.
 """
 import argparse
@@ -46,6 +57,14 @@ def records(path):
         yield cur
 
 
+STAGE_ID = re.compile(r"(codegenStageId=|GeneratedIteratorForCodegenStage)\d+")
+
+
+def source_key(text):
+    """The hash of a logged source with its codegen stage id taken out."""
+    return hashlib.sha1(STAGE_ID.sub(r"\1N", text).encode()).hexdigest()[:12]
+
+
 def thread_kind(thread):
     return re.sub(r"\d+", "N", thread.split(" for ")[0]).strip()
 
@@ -70,7 +89,7 @@ def main():
     for level, thread, lines in records(args.log):
         text = "\n".join(lines)
         if level == "DEBUG":
-            h = hashlib.sha1(text.encode()).hexdigest()[:12]
+            h = source_key(text)
             labels.setdefault(h, label(text))
             last[thread] = len(compiles)
             compiles.append([h, thread_kind(thread), 0.0])
@@ -92,12 +111,18 @@ def main():
           f"{sum(per_source[h] - 1 for h in again)} extra compiles, "
           f"{again_ms:.0f} ms on those sources")
 
-    print("\nper thread kind: compiles, distinct sources, ms")
     kinds = collections.defaultdict(list)
+    kinds_of = collections.defaultdict(set)  # source hash -> thread kinds
     for c in compiles:
         kinds[c[1]].append(c)
+        kinds_of[c[0]].add(c[1])
+    print("\nper thread kind: compiles, distinct sources, recompiled sources, "
+          "those also compiled under another kind, ms")
     for kind, cs in sorted(kinds.items(), key=lambda kv: -len(kv[1])):
-        print(f"  {len(cs):6d} {len({c[0] for c in cs}):6d} {sum(c[2] for c in cs):9.0f}  {kind}")
+        hs = {c[0] for c in cs} & again
+        print(f"  {len(cs):6d} {len({c[0] for c in cs}):6d} {len(hs):6d} "
+              f"{sum(len(kinds_of[h]) > 1 for h in hs):6d} "
+              f"{sum(c[2] for c in cs):9.0f}  {kind}")
 
     if again:
         print(f"\nrecompiled sources (top {args.top}): compiles, ms, source, thread kinds")

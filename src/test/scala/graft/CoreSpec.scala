@@ -206,43 +206,57 @@ class CoreSpec extends SparkSpec {
     // Spark keeps compiled generated classes in one JVM-wide cache of
     // `spark.sql.codegen.cache.maxEntries` entries, keyed by (class
     // loader, source) and sized once, on the first compile. build.sbt
-    // raises it from 100, which one pass over these four queries
-    // overflows: each pass then evicts classes the next one needs, and
-    // every evicted class compiles again and loses its JIT'd code.
-    // The second pass may still compile a few sources the first did
-    // not: q2's adaptive plan numbers its codegen stages in the order
-    // its query stages are planned, so the same code can come back
-    // under another class name. Every such compile is a key the cache
-    // did not hold, so the pin counts compiles against new keys.
-    // Streaming queries stay out: each run clones the session, and the
-    // clone's tasks load their classes through a fresh executor class
-    // loader, so they compile again under any cap.
+    // raises it from 100, which one pass over these queries overflows:
+    // each pass then evicted classes the next one needed, and every
+    // evicted class compiled again and lost its JIT'd code. It also
+    // turns off artifact isolation, which gave every session its own
+    // executor class loader: stream_wordcount clones the session on
+    // every run, so its tasks recompiled all their classes each pass.
+    // And it drops the codegen stage id from whole-stage class names,
+    // so a stage's source no longer depends on the number adaptive
+    // planning gave it. Once the first pass has compiled them, later
+    // passes compile nothing. The adaptive plans of q2 and
+    // dedup_minhash_lsh can still come back with a stage whose code
+    // the first pass never produced, so for those two the pin counts
+    // compiles against keys new to the cache.
     import org.apache.spark.metrics.source.CodegenMetrics
     import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     import org.sparkproject.guava.cache.Cache
     import scala.jdk.CollectionConverters._
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "8192")
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
     // CodeGenerator.cache is private: a NonFateSharingLoadingCache over a Guava cache
     val field = CodeGenerator.getClass.getDeclaredField("cache")
     field.setAccessible(true)
     val wrapper = field.get(CodeGenerator)
     val cache = wrapper.getClass.getMethod("loadingCache").invoke(wrapper).asInstanceOf[Cache[AnyRef, AnyRef]]
-    def state = (cache.asMap.keySet.asScala.toSet, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
-    val names = Seq("wordcount", "dedup_minhash_lsh", "q2_shape_min_cost", "q9_shape_profit")
-    def pass(): Unit = names.foreach { n =>
+    def keys = cache.asMap.keySet.asScala.toSet
+    val adaptive = Seq("dedup_minhash_lsh", "q2_shape_min_cost")
+    val names = Seq("wordcount", "q9_shape_profit", "stream_wordcount") ++ adaptive
+    // per query: (compiles, keys new to the cache)
+    def pass(): Map[String, (Long, Int)] = names.map { n =>
+      val (k0, c0) = (keys, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
       SparkEntry.queries(n)(spark, sf).write.format("noop").mode("overwrite").save()
       Core.releaseCaches()
-    }
-    val (start, _) = state
+      n -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, (keys -- k0).size)
+    }.toMap
+    val start = keys
     pass()
-    val (first, before) = state
-    pass()
-    val (second, after) = state
     // the cache may already hold other suites' classes, which LRU may evict
-    val compiled = first -- start
-    val (evicted, added) = ((compiled -- second).size, (second -- first).size)
-    assert(evicted == 0, s"the second pass evicted $evicted of the ${compiled.size} classes the first compiled")
-    assert(after - before == added, s"the second pass compiled ${after - before} classes, $added of them new")
+    val compiled = keys -- start
+    for (i <- 2 to 3) {
+      val counts = pass()
+      val evicted = (compiled -- keys).size
+      assert(evicted == 0, s"pass $i evicted $evicted of the ${compiled.size} classes the first compiled")
+      names.filterNot(adaptive.contains).foreach { n =>
+        assert(counts(n)._1 == 0, s"pass $i compiled ${counts(n)._1} classes for $n")
+      }
+      adaptive.foreach { n =>
+        val (compiles, added) = counts(n)
+        assert(compiles == added, s"pass $i compiled $compiles classes for $n, $added of them new")
+      }
+    }
   }
 
   test("every .collect() in src/main is a 1-row limit(1) loop-control read") {
