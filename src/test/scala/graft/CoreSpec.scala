@@ -215,9 +215,11 @@ class CoreSpec extends SparkSpec {
     // And it drops the codegen stage id from whole-stage class names,
     // so a stage's source no longer depends on the number adaptive
     // planning gave it. Once the first pass has compiled them, later
-    // passes compile nothing. The adaptive plans of q2 and
-    // dedup_minhash_lsh can still come back with a stage whose code
-    // the first pass never produced, so for those two the pin counts
+    // passes compile nothing. Adaptive planning can still choose
+    // another plan on a later run (q2's self-join broadcast its left
+    // side on its first run in a session and its right side on later
+    // runs), and a new plan brings stages whose code no earlier pass
+    // produced, so for q2 and dedup_minhash_lsh the pin counts
     // compiles against keys new to the cache.
     import org.apache.spark.metrics.source.CodegenMetrics
     import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
