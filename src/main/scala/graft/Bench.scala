@@ -1,24 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing targets shuffle BYTES and serializes the
-      // compute-heavy small-data stages (LSH candidate verification
-      // folds run per-row; a 10 MB pair list coalesced to 1 partition
-      // pins one core for minutes). Keep AQE for skew/plan adaptation
-      // but hold every shuffle at full parallelism.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Clear the previous run's summary artifact up front: a crashed
     // or killed run must leave NO file (read as "run failed"), never
     // a stale summary that parses as this run's numbers.
@@ -27,21 +10,14 @@ object Bench {
     java.nio.file.Files.deleteIfExists(summaryPath)
     java.nio.file.Files.deleteIfExists(detailPath)
     // Optional comma-separated name filter for profiling a subset
-    // (e.g. SPARK_GRAFT_BENCH_ONLY=scalar_dates,pipeline_corpus_prep).
+    // (e.g. SPARK_GRAFT_BENCH_ONLY=scalar_dates,pipeline_corpus_prep),
+    // over the full catalog so a non-headline query can be profiled too.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // Fail fast on misspelled names (same hazard as Verify): an empty
-    // selection would print a vacuous ~0 s "total" that reads as a
-    // speedup. The filter runs over the FULL catalog so profiling a
-    // non-headline query by name still works.
-    only.foreach { names =>
-      val known = SparkEntry.all.map(_.name).toSet
-      val unknown = names.filterNot(known)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(", ")}")
-    }
-    val picked = only.fold(SparkEntry.benchQueries)(names =>
-      SparkEntry.all.filter(q => names(q.name)))
+    val picked = SparkEntry.pick(only, SparkEntry.benchQueries)
+    // Parsed up front so a malformed value fails before the timed passes.
+    val round = sys.env.get("SPARK_GRAFT_ROUND").map(_.trim.toInt)
+    val spark = Core.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // A failing query must surface in the output, never read as a ~0 s
     // "speedup": names land in the "errors" array and get no timing.
     val errors = scala.collection.mutable.LinkedHashSet[String]()
@@ -152,55 +128,15 @@ object Bench {
     java.nio.file.Files.createDirectories(detailPath.getParent)
     java.nio.file.Files.write(detailPath,
       (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // The r15 verdict's per-query r14/r15 comparison had to be
-    // reconstructed from truncated 2 KB stdout tails — so the detail
-    // also lands as a COMMITTED round artifact next to the driver's
-    // BENCH_r{N}.json. The round number is inferred from the committed
-    // artifacts themselves: this run belongs to round max+1 (the
-    // driver writes BENCH_r{N} AFTER the round's bench). Written only
-    // when run from the repo root on the full bench set, so a
-    // SPARK_GRAFT_BENCH_ONLY profiling subset can't masquerade as the
-    // round's numbers.
-    // Guarded to the driver's scale point AND core count: an sf0.001
-    // profiling lap once clobbered the round's committed sf0.1
-    // per-query baseline (r18 inherited state), and the driver's own
-    // reduced-core scaling lap once landed as the NEXT round's
-    // "32-core" baseline (r18 verdict: an 8-core 73.9 s run written
-    // as BENCH_DETAIL_r19.json). The committed detail is only
-    // meaningful at the driver's bench configuration; both knobs stay
-    // env-overridable so a differently named data dir doesn't
-    // silently disable the write forever (the opposite failure mode).
-    val driverSf = sys.env.getOrElse("SPARK_GRAFT_DRIVER_SF", "sf0.1")
-    val driverCpus = sys.env.getOrElse("SPARK_GRAFT_DRIVER_CPUS", "32")
-    val isDriverShape =
-      new java.io.File(sfDir).getName == driverSf && cpus == driverCpus
-    if (only.isEmpty && !isDriverShape)
-      System.err.println(s"[bench] committed-detail write skipped: " +
-        s"sf=${new java.io.File(sfDir).getName} cpus=$cpus is not the " +
-        s"driver shape ($driverSf @ $driverCpus cpus)")
-    if (only.isEmpty && isDriverShape) {
-      // Round inference hazard: a manual rerun AFTER the driver has
-      // already committed this round's BENCH_r{N}.json would label
-      // its detail as round N+1. SPARK_GRAFT_ROUND pins the number
-      // explicitly for such reruns; the max+1 inference remains the
-      // default because the driver's own bench always runs BEFORE
-      // its BENCH_r{N}.json exists.
-      val rPat = "BENCH_r(\\d+)\\.json".r
-      // Defensive parse: a malformed SPARK_GRAFT_ROUND must not crash
-      // the bench after all timing work is done — fall through to the
-      // max+1 inference instead.
-      val round = sys.env.get("SPARK_GRAFT_ROUND")
-        .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-        .orElse(Option(new java.io.File(".").listFiles).toSeq.flatten
-          .flatMap(f => f.getName match {
-            case rPat(n) => Some(n.toInt)
-            case _ => None
-          }).reduceOption(_ max _).map(_ + 1))
-      round.foreach { r =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(f"BENCH_DETAIL_r$r%02d.json"),
-          (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
+    // SPARK_GRAFT_ROUND=N also commits the detail as
+    // BENCH_DETAIL_rNN.json next to the round's BENCH_rNN.json, so
+    // per-query comparisons across rounds need no stdout tail. Only
+    // the full bench set is committed: a SPARK_GRAFT_BENCH_ONLY subset
+    // can't masquerade as the round's numbers.
+    round.filter(_ => only.isEmpty).foreach { r =>
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(f"BENCH_DETAIL_r$r%02d.json"),
+        (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
     val slowest = results.toSeq.sortBy(-_._2).take(10).toMap
     val summary = s"""{"metric":"total","value":$total,"unit":"sec","method":"min-of-2+adaptive-3rd-warmed","pass_totals":$passTotals,"errors":$errJson,"queries":${qjson(slowest)},"sf":"$sfDir"}"""

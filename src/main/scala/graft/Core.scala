@@ -86,6 +86,61 @@ object Tables {
 
 /** Helpers shared by operator modules. */
 object Core {
+  /** The session configuration every graft entry point runs under
+    * (Bench, Verify, PlanDump and the test suites), apart from the
+    * core count [[session]] takes. */
+  val SessionConf: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    // AQE coalescing targets shuffle BYTES and serializes the
+    // compute-heavy small-data stages (LSH candidate verification
+    // folds run per-row; a 10 MB pair list coalesced to 1 partition
+    // pins one core for minutes). Keep AQE for skew/plan adaptation
+    // but hold every shuffle at full parallelism.
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    "spark.ui.enabled" -> "false",
+    // Spark keeps compiled generated classes in one JVM-wide cache of
+    // 100 entries by default, split into 4 LRU segments of 25. The four
+    // single_action perfbench queries need about 100 distinct classes a
+    // lap, so every lap evicted and recompiled ~30 of them (about 0.5 s
+    // a lap, and the JIT relearned each recompiled class). A whole
+    // sf0.01 Verify run with the two options below and an unbounded cap
+    // compiles 3,681 distinct (class loader, source) pairs: 2,336
+    // distinct sources, most of them compiled once under a driver
+    // thread's loader and once under the executor's. 8192 holds them
+    // all with room for uneven segments, at about 27 KB of live heap
+    // per held class (measured on an earlier whole-catalog run).
+    // Spark reads it once, on the first compile.
+    "spark.sql.codegen.cache.maxEntries" -> "8192",
+    // Spark 4.1's artifact isolation gives every session, each streaming
+    // query's clone included, its own executor class loader, and the
+    // codegen cache key holds the loader: stream_wordcount's clone
+    // recompiled its 13 classes on every run (driver_loops: about 135 ms
+    // of compiles a lap). graft adds no artifacts (no addArtifact, no
+    // Spark Connect), so the isolation scoped nothing; off, every
+    // session's tasks share the executor's one loader.
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    // Whole-stage class names carry the codegen stage id, which adaptive
+    // planning assigns in the order it plans query stages, so the same
+    // iterator came back as GeneratedIteratorForCodegenStage10 or …11 and
+    // missed the cache (q2_shape_min_cost: 9 new classes in a later
+    // pass). Without the id the cache key is the stage's code alone.
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
+  /** The local session on `cpus` cores, one shuffle partition per
+    * core, under [[SessionConf]], logging at WARN. */
+  def session(cpus: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config(SessionConf)
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Temp directory removed recursively at JVM exit — used by the
     * connector round-trips, bucketed tables, and stream-replay
     * symlink dirs so repeated runs don't accumulate table copies. */

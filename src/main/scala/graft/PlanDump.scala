@@ -1,11 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round tooling: dump `.explain("formatted")` for named
   * queries (or the full bench set) to `<outDir>/<name>.txt`, under the
-  * exact session configuration Bench uses, so plan claims in
+  * [[Core.session]] Bench uses, so plan claims in
   * OPTIMIZATION notes are reproducible artifacts.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> [name,name,...]
@@ -15,26 +14,9 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.lift(2).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { ns =>
-      val known = SparkEntry.all.map(_.name).toSet
-      val unknown = ns.filterNot(known)
-      require(unknown.isEmpty,
-        s"PlanDump names unknown queries: ${unknown.mkString(", ")}")
-    }
+    val picked = SparkEntry.pick(names, SparkEntry.benchQueries)
+    val spark = Core.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     Files.createDirectories(Paths.get(outDir))
-    val picked = names.fold(SparkEntry.benchQueries)(ns =>
-      SparkEntry.all.filter(q => ns(q.name)))
     picked.foreach { q =>
       // Streaming queries execute inside their builder and return a
       // batch read-back of the sink; the explain below is that batch

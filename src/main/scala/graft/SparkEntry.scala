@@ -27,6 +27,17 @@ object SparkEntry {
     WordCount.wordCount(Tables(spark, dir, "documents"))
   }
 
+  /** The registered queries named in `names`, or `default` when no
+    * names are given. Fails fast on a name the catalog does not hold:
+    * an empty selection would read as a vacuous success (Verify dumps
+    * `{}`, Bench prints a ~0 s total). */
+  def pick(names: Option[Set[String]], default: Seq[Q]): Seq[Q] =
+    names.fold(default) { ns =>
+      val unknown = ns -- all.map(_.name)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      all.filter(q => ns(q.name))
+    }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.spark).toMap

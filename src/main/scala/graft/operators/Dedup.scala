@@ -1495,11 +1495,17 @@ object Dedup {
         .unionAll(e0.select(col("b").as("src"), col("a").as("dst"))),
       s"$ckpt/adj")
     val verts = cached(adj.select(col("src").as("v")).distinct())
-    var dist = graft.Core.parquetLeaf(
-      verts.filter(col("v") % 100 === 0).select(col("v"), lit(0L).as("dist")),
-      s"$ckpt/d0")
+    // the reached count rides each round's checkpoint write, as in
+    // [[kcorePeel]], so a round is one action
+    def reached(df: DataFrame, r: Int): (DataFrame, Long) = {
+      val obs = org.apache.spark.sql.Observation(s"bfs-r$r")
+      val leaf = graft.Core.parquetLeaf(
+        df.observe(obs, count(lit(1)).as("n")), s"$ckpt/d$r")
+      (leaf, obs.get("n").asInstanceOf[Long])
+    }
+    var (dist, n) = reached(
+      verts.filter(col("v") % 100 === 0).select(col("v"), lit(0L).as("dist")), 0)
     var r = 0
-    var n = dist.count()
     var growing = n > 0
     while (r < BfsRounds && growing) {
       r += 1
@@ -1508,8 +1514,8 @@ object Dedup {
         .select(col("dst").as("v")).distinct()
         .join(dist.select("v"), Seq("v"), "left_anti")
         .select(col("v"), lit(r.toLong).as("dist"))
-      dist = graft.Core.parquetLeaf(dist.unionAll(next), s"$ckpt/d$r")
-      val n2 = dist.count()
+      val (d2, n2) = reached(dist.unionAll(next), r)
+      dist = d2
       growing = n2 > n
       n = n2
     }

@@ -379,19 +379,27 @@ object TextAnalysis {
       keyed.join(ids, Seq("rk", "rk2"))
         .select(col("pos"), col("nrk").as("rk"))
     }
-    var r = ckptRound(denseRank(chars
+    // ranks are dense 1..|keys|, so the max rank observed on the
+    // checkpoint write is the distinct-rank count: a round is one action
+    def ranked(keyed: DataFrame): (DataFrame, Long) = {
+      val obs = org.apache.spark.sql.Observation()
+      val leaf = ckptRound(denseRank(keyed)
+        .observe(obs, coalesce(max(col("rk")), lit(0L)).as("d")), "graft-sa")
+      (leaf, obs.get("d").asInstanceOf[Long])
+    }
+    var (r, distinct) = ranked(chars
       .select(col("pos"),
         ascii(col("ch")).cast("bigint").as("rk"),
-        lit(-1L).as("rk2"))), "graft-sa")
+        lit(-1L).as("rk2")))
     var off = 1L
-    var distinct = r.select(countDistinct(col("rk"))).head.getLong(0)
     while (off < n && distinct < n) {
       val shifted = r.select((col("pos") - off).as("pos"), col("rk").as("rk2"))
       val keyed = r.join(shifted, Seq("pos"), "left")
         .na.fill(-1L, Seq("rk2"))
-      r = ckptRound(denseRank(keyed), "graft-sa")
+      val (r2, d2) = ranked(keyed)
+      r = r2
+      distinct = d2
       off *= 2
-      distinct = r.select(countDistinct(col("rk"))).head.getLong(0)
     }
     System.err.println(s"[sa] n=$n prefix_len=$off distinct=$distinct")
     (chars, r)

@@ -205,7 +205,7 @@ class CoreSpec extends SparkSpec {
   test("a second pass over the single_action queries recompiles no generated class") {
     // Spark keeps compiled generated classes in one JVM-wide cache of
     // `spark.sql.codegen.cache.maxEntries` entries, keyed by (class
-    // loader, source) and sized once, on the first compile. build.sbt
+    // loader, source) and sized once, on the first compile. Core.session
     // raises it from 100, which one pass over these queries overflows:
     // each pass then evicted classes the next one needed, and every
     // evicted class compiled again and lost its JIT'd code. It also
@@ -225,9 +225,6 @@ class CoreSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     import org.sparkproject.guava.cache.Cache
     import scala.jdk.CollectionConverters._
-    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "8192")
-    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
-    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
     // CodeGenerator.cache is private: a NonFateSharingLoadingCache over a Guava cache
     val field = CodeGenerator.getClass.getDeclaredField("cache")
     field.setAccessible(true)
@@ -259,6 +256,41 @@ class CoreSpec extends SparkSpec {
         assert(compiles == added, s"pass $i compiled $compiles classes for $n, $added of them new")
       }
     }
+  }
+
+  test("the test session runs under Core.session's config, and forked JVMs get its codegen settings") {
+    val conf = spark.conf.getAll
+    val drift = Core.SessionConf.filterNot { case (k, v) => conf.get(k).contains(v) }
+    assert(drift.isEmpty, s"session conf differs from Core.SessionConf on ${drift.keys.mkString(", ")}")
+    assert(conf.get("spark.master").contains("local[4]"))
+    assert(conf.get("spark.sql.shuffle.partitions").contains("4"))
+    // build.sbt passes these to every JVM it forks, this one included,
+    // for sessions built outside Core.session (perfbench's harness)
+    val codegen = Seq("spark.sql.codegen.cache.maxEntries",
+      "spark.sql.artifact.isolation.enabled", "spark.sql.codegen.useIdInClassName")
+    codegen.foreach { k =>
+      assert(sys.props.get(k) == Core.SessionConf.get(k), s"-D$k in build.sbt differs from Core.SessionConf")
+    }
+  }
+
+  test("the one session builder is Core.session: none elsewhere in src/main or in src/test") {
+    import scala.jdk.CollectionConverters._
+    def sites(dir: String): Seq[String] = {
+      val root = java.nio.file.Paths.get(dir)
+      val files = java.nio.file.Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+      assert(files.nonEmpty, s"no sources under $root — cwd moved?")
+      files.flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if l.contains("SparkSession" + ".builder") => s"${p.getFileName}:${i + 1}"
+        }
+      }
+    }
+    val main = sites("src/main/scala/graft")
+    assert(main.size == 1 && main.head.startsWith("Core.scala:"),
+      s"session builders in src/main: ${main.mkString(", ")}")
+    val test = sites("src/test")
+    assert(test.isEmpty, s"session builders in src/test: ${test.mkString(", ")}")
   }
 
   test("every .collect() in src/main is a 1-row limit(1) loop-control read") {

@@ -24,66 +24,10 @@ class DeterminismSpec extends SparkSpec {
     val names = SparkEntry.all.map(_.name).toSet
     val unknown = SparkEntry.benchSet.filterNot(names)
     assert(unknown.isEmpty, s"benchSet typos: ${unknown.mkString(", ")}")
-    // The cap keeps 3 bench laps inside the driver's wall-clock
-    // budget on this host (see SparkEntry.benchSet): 70 sized the
-    // original curation; +1 admitted the sub-2-second streaming-sketch
-    // addition; +1 admits the sessionize A/B twin, measured 0.5 s at
-    // sf0.1; +1 (r12) admits dedup_repeated_spans, measured 2.0 s at
-    // sf0.1 in the SAME round the fuzzy fix cut the whole suite
-    // 100.6 → 79.9 s min-of-2 — net budget went DOWN. Raise only
-    // with a measured timing for each admitted query. +1 (r13)
-    // admits q9_shape_profit — the one TPC-H plan shape (5-table
-    // two-fact rollup over a computed measure) the partsupp
-    // exclusions left unexercised — measured 1.82 s min-of-2 at
-    // sf0.1. +2 (r13) admit dedup_bloom_incremental (broadcast
-    // bitset probe + gated semi-join, measured 1.24 s min-of-2 at
-    // sf0.1) and sketch_join_size (two-scan Count-Min build +
-    // cell-product composition, measured 0.85 s min-of-2 at sf0.1).
-    // +1 (r13) admits quality_corr_matrix — the wide exact-decimal
-    // moment aggregate (15 decimal(38,0) sums in one scan), a plan
-    // family nothing else times — measured 1.28 s min-of-2 at sf0.1.
-    // +2 (r14) admit pipeline_bin_pack (the sortWithinPartitions +
-    // per-partition imperative fold family, measured 0.96 s min-of-2
-    // at sf0.1) and quality_equidepth_hist (the two-phase global-rank
-    // family on the 10^5-row events table, measured 1.31 s min-of-2
-    // at sf0.1) — the same r14 bench run came in at 85.7 s total vs
-    // r13's 90.1 s, so the suite budget still went DOWN net.
-    // +2 (r14, late) admit text_phrase_search (the broadcast-gated
-    // positional posting join, measured 1.37 s min-of-2 at sf0.1) and
-    // events_rolling_distinct (the interval-contribution explode +
-    // two-stage countDistinct, measured 1.50 s min-of-2 at sf0.1) —
-    // together ~2.9 s against the ~4.4 s the budget went down this
-    // round.
-    // +4 (r15) admit events_acf (1.06 s), join_interval_overlap
-    // (3.67 s at admission; 2.25 s after the same-round dedup-free
-    // max-start-bin emission), lm_kneser_ney (1.61 s), multimodal_gif_decode
-    // (0.64 s) — all measured min-of-2 at sf0.1 this round; each is
-    // a plan family nothing else times (exact-moment lag join,
-    // bin-blocked interval self-join, four-statistic bigram rollup,
-    // entropy-coded LZW decode). ~7 s added against the ~18 s the
-    // oracle-side compare budget went DOWN this round (34 → 16 s).
-    // +3/−3 (r16) admit q2_shape_min_cost (2.43 s — ReusedExchange
-    // decorrelated min-cost subquery), q20_shape_excess_semi (1.51 s
-    // — double semi-join chain off one conditional-agg fact scan),
-    // lm_kn_trigram (2.87 s — two-level KN back-off chain); demote
-    // lm_kneser_ney AND lm_bigram_prob (both are the trigram plan's
-    // own lower level) and wordcount_topk (wordcount's aggregate +
-    // a TakeOrdered, each timed elsewhere) — net +2 s against the
-    // unchanged ≤85 budget. stream_interval_overlap (6.41 s) stays
-    // correctness-only: upsert-loop shape already timed by
-    // stream_ann_upsert over the benched interval tail.
-    // +1/−1 (r17) admit multimodal_mjpeg_decode (1.311 s min-of-2 at
-    // sf0.1 across two JVMs — the multi-frame container-walk +
-    // per-frame transform-decode family: 3 entropy decodes + integer
-    // IDCTs per row plus RIFF/idx1 validation; no other benched query
-    // times a transform codec); demote multimodal_features (0.322 s
-    // byte-stub fold — its partition-local-decode plan shape is timed
-    // by every real codec). The round's other additions stay
-    // correctness-only: lm_kn_perplexity's join chain is
-    // lm_kn_trigram's own, stream_er_golden's per-batch loop is the
-    // stream_dedup_clusters/stream_ann_upsert shape, grouping_sets_ds8
-    // is cube_sales' Expand+agg, multimodal_audio_spectral is the
-    // gif/mjpeg mapPartitions decode family.
+    // The cap keeps the bench set's laps inside the bench's wall-clock
+    // budget (see SparkEntry.benchSet). Raise it, or swap a query in,
+    // only with a measured sf0.1 timing for each admitted query,
+    // recorded in CHANGES.md.
     assert(SparkEntry.benchSet.size <= 85)
     assert(SparkEntry.benchQueries.nonEmpty)
   }

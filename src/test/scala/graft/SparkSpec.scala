@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local SparkSession for all suites (same configs as the
-  * driver-facing [[Verify]] session). */
+/** One shared local SparkSession for all suites: [[Core.session]], the
+  * one every entry point runs under. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf = "/root/testdata/sf0.001"
@@ -68,23 +68,6 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing targets shuffle BYTES and serializes the
-      // compute-heavy small-data stages (LSH candidate verification
-      // folds run per-row; a 10 MB pair list coalesced to 1 partition
-      // pins one core for minutes). Keep AQE for skew/plan adaptation
-      // but hold every shuffle at full parallelism.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Four cores on any host: the suites do not read SPARK_GRAFT_CPUS. */
+  lazy val session: SparkSession = Core.session(4)
 }
